@@ -39,7 +39,19 @@ Semantics preserved (SURVEY §7.4):
   orphaned adjacency refs — SURVEY §7.4 trap 5, deliberately cleaner).
 
 These are POINT operations (the reference's entire workload is point ops on
-a 9-node graph).  Set-at-a-time analytics over the same tables — scans,
+a 9-node graph), so their cost is Spark job latency, and the budget is kept
+in jobs (pinned by tests/test_graph.py::test_point_op_job_counts):
+
+- ``get_attribute`` / ``get_related_list`` / ``all_nodes``: ONE job each —
+  store reads carry the manifest's recorded schema (no footer-inference
+  job) and adjacency/id order is sorted on the driver after the collect;
+- a ``set_attribute`` + ``add_related`` commit: at most six (five today) —
+  the prepend-position lookup (one aggregate: its shuffle stage and its
+  result are a job each under AQE), the broadcast of the update rows, and
+  one write per changed table; node types the transaction did not touch
+  are not read.
+
+Set-at-a-time analytics over the same tables — scans,
 multi-hop joins, bag difference — live in ``edgy_spark.query``; at 100 TB
 you use that layer, and mutations arrive as DataFrame batches via
 ``Transaction.bulk_*`` which never touch the driver row-by-row.
@@ -154,11 +166,13 @@ class Transaction:
         """Universe existence-relation scan (app/Main.hs:132-136)."""
         self.schema.node_type(node_type)
         dead = self._deleted.get(node_type, set())
-        ids = [
+        # sorted on the driver: collect() already brings every id here, and
+        # an orderBy would add a sampling job and a shuffle
+        ids = sorted(
             r[0]
-            for r in self.snap.nodes(node_type).select("id").orderBy("id").collect()
+            for r in self.snap.nodes(node_type).select("id").collect()
             if r[0] not in dead
-        ]
+        )
         ids += [
             row["id"] for row in self._new_nodes.get(node_type, []) if row["id"] not in dead
         ]
@@ -226,17 +240,20 @@ class Transaction:
             raise TypeError(
                 f"relation {rel_name!r} starts at {side.source!r}, not {node.node_type!r}"
             )
-        df = self.snap.edge_table(side.table)
         if side.forward or side.symmetric:
-            rows = (
-                df.filter(F.col("src") == node.id).orderBy("pos").select("dst").collect()
-            )
-            adj = [r[0] for r in rows]
+            key, order, other = "src", "pos", "dst"
         else:
-            rows = (
-                df.filter(F.col("dst") == node.id).orderBy("ipos").select("src").collect()
-            )
-            adj = [r[0] for r in rows]
+            key, order, other = "dst", "ipos", "src"
+        # one job: the adjacency is collected whole anyway, so it is put in
+        # list order on the driver (an orderBy costs a sampling job and a
+        # shuffle on top)
+        rows = (
+            self.snap.edge_table(side.table)
+            .filter(F.col(key) == node.id)
+            .select(order, other)
+            .collect()
+        )
+        adj = [v for _, v in sorted((r[0], r[1]) for r in rows)]
         adj = self._replay(side, node.id, adj)
         dead = self._deleted.get(side.target, set())
         adj = [i for i in adj if i not in dead]
@@ -288,20 +305,10 @@ class Transaction:
             if op == "bulk":
                 b = entry[1]
                 if side.forward or side.symmetric:
-                    rows = (
-                        b.filter(F.col("src") == key)
-                        .orderBy("dst")
-                        .select("dst")
-                        .collect()
-                    )
+                    rows = b.filter(F.col("src") == key).select("dst").collect()
                 else:
-                    rows = (
-                        b.filter(F.col("dst") == key)
-                        .orderBy("src")
-                        .select("src")
-                        .collect()
-                    )
-                adj = [r[0] for r in rows] + adj
+                    rows = b.filter(F.col("dst") == key).select("src").collect()
+                adj = sorted(r[0] for r in rows) + adj
                 continue
             if side.forward or side.symmetric:
                 if op == "add" and entry[1] == key:
@@ -383,16 +390,19 @@ class Transaction:
         cdc: dict[str, DataFrame] = {}
         spark = self.engine.spark
 
-        all_deleted = self._deleted
-        for node_type, nt in ((n.name, n) for n in self.schema.node_types):
+        for nt in self.schema.node_types:
+            node_type = nt.name
+            dead = self._deleted.get(node_type, set())
+            updates = self._attr_updates.get(node_type, {})
+            new_rows = [
+                r for r in self._new_nodes.get(node_type, []) if r["id"] not in dead
+            ]
+            if not (dead or updates or new_rows):
+                continue  # untouched type: its table is never read
             base = self.snap.nodes(node_type)
-            touched = False
             df = base
-            dead = all_deleted.get(node_type, set())
             if dead:
                 df = df.filter(~F.col("id").isin(list(dead)))
-                touched = True
-            updates = self._attr_updates.get(node_type, {})
             if updates:
                 # per-(node, attr) set-mask: vals.get(name) is None BOTH for
                 # "not updated by this node" and "updated to null", and the
@@ -425,7 +435,10 @@ class Transaction:
                     *[F.col(a).alias(f"_u_{a}") for a in sorted(upd_set)],
                     *[F.col(f"__set_{a}") for a in sorted(upd_set)],
                 )
-                df = df.join(upd, df.id == upd._uid, "left").select(
+                # broadcast: the update rows come from a driver dict, but a
+                # createDataFrame scan has no size estimate, so unhinted
+                # this plans a sort-merge join that shuffles the whole table
+                df = df.join(F.broadcast(upd), df.id == upd._uid, "left").select(
                     "id",
                     *[
                         (
@@ -441,80 +454,74 @@ class Transaction:
                         for a in nt.attrs
                     ],
                 )
-                touched = True
-            new_rows = [
-                r for r in self._new_nodes.get(node_type, []) if r["id"] not in dead
-            ]
             if new_rows:
                 df = df.unionByName(spark.createDataFrame(new_rows, nt.struct_type()))
-                touched = True
-            if touched:
-                changed[f"n_{node_type}"] = df
-                if self.engine.capture_cdc:
-                    # commit-time change capture from STAGED state — O(rows
-                    # touched by this txn), no diff join (Delta-CDF shape).
-                    # A node created AND deleted in the same txn nets to
-                    # zero rows (insert excluded by `dead`, delete preimage
-                    # absent from `base`).
-                    parts: list[DataFrame] = []
-                    if new_rows:
+            changed[f"n_{node_type}"] = df
+            if self.engine.capture_cdc:
+                # commit-time change capture from STAGED state — O(rows
+                # touched by this txn), no diff join (Delta-CDF shape).
+                # A node created AND deleted in the same txn nets to
+                # zero rows (insert excluded by `dead`, delete preimage
+                # absent from `base`).
+                parts: list[DataFrame] = []
+                if new_rows:
+                    parts.append(
+                        spark.createDataFrame(
+                            new_rows, nt.struct_type()
+                        ).withColumn("_change", F.lit("insert"))
+                    )
+                live_upd = [i for i in updates if i not in dead]
+                if live_upd:
+                    # postimages built DRIVER-side (ADVICE r07): the
+                    # updated values are already in the updates dict;
+                    # the untouched attrs come from one bounded
+                    # point-read of base (id-pushdown scan, no join).
+                    # Filtering the STAGED df here would re-execute the
+                    # whole base-scan + update-join plan a second time
+                    # at commit just to write the CDC parquet.
+                    pre = {
+                        r["id"]: r.asDict()
+                        for r in base.filter(
+                            F.col("id").isin(live_upd)
+                        ).collect()
+                    }
+                    post_rows = [
+                        {**pre[i], **updates[i]}
+                        for i in live_upd
+                        if i in pre  # nonexistent id: no postimage
+                    ]
+                    if post_rows:
                         parts.append(
                             spark.createDataFrame(
-                                new_rows, nt.struct_type()
-                            ).withColumn("_change", F.lit("insert"))
+                                post_rows, nt.struct_type()
+                            ).withColumn(
+                                "_change", F.lit("update_postimage")
+                            )
                         )
-                    live_upd = [i for i in updates if i not in dead]
-                    if live_upd:
-                        # postimages built DRIVER-side (ADVICE r07): the
-                        # updated values are already in the updates dict;
-                        # the untouched attrs come from one bounded
-                        # point-read of base (id-pushdown scan, no join).
-                        # Filtering the STAGED df here would re-execute the
-                        # whole base-scan + update-join plan a second time
-                        # at commit just to write the CDC parquet.
-                        pre = {
-                            r["id"]: r.asDict()
-                            for r in base.filter(
-                                F.col("id").isin(live_upd)
-                            ).collect()
-                        }
-                        post_rows = [
-                            {**pre[i], **updates[i]}
-                            for i in live_upd
-                            if i in pre  # nonexistent id: no postimage
-                        ]
-                        if post_rows:
+                    if self.engine.capture_cdc == "full":
+                        # Delta-CDF full shape: the preimages are the
+                        # SAME point-read rows the postimages overlay —
+                        # zero extra Spark work, one more local part
+                        pre_rows = [pre[i] for i in live_upd if i in pre]
+                        if pre_rows:
                             parts.append(
                                 spark.createDataFrame(
-                                    post_rows, nt.struct_type()
+                                    pre_rows, nt.struct_type()
                                 ).withColumn(
-                                    "_change", F.lit("update_postimage")
+                                    "_change", F.lit("update_preimage")
                                 )
                             )
-                        if self.engine.capture_cdc == "full":
-                            # Delta-CDF full shape: the preimages are the
-                            # SAME point-read rows the postimages overlay —
-                            # zero extra Spark work, one more local part
-                            pre_rows = [pre[i] for i in live_upd if i in pre]
-                            if pre_rows:
-                                parts.append(
-                                    spark.createDataFrame(
-                                        pre_rows, nt.struct_type()
-                                    ).withColumn(
-                                        "_change", F.lit("update_preimage")
-                                    )
-                                )
-                    if dead:
-                        parts.append(
-                            base.filter(F.col("id").isin(list(dead))).withColumn(
-                                "_change", F.lit("delete")
-                            )
+                if dead:
+                    parts.append(
+                        base.filter(F.col("id").isin(list(dead))).withColumn(
+                            "_change", F.lit("delete")
                         )
-                    if parts:
-                        out = parts[0]
-                        for p in parts[1:]:
-                            out = out.unionByName(p)
-                        cdc[f"n_{node_type}"] = out
+                    )
+                if parts:
+                    out = parts[0]
+                    for p in parts[1:]:
+                        out = out.unionByName(p)
+                    cdc[f"n_{node_type}"] = out
 
         for table in self.schema.edge_tables:
             df = self._rebuild_edges(table)
@@ -541,7 +548,7 @@ class Transaction:
         staged after — and a later ``add_related`` on the same key prepends
         ABOVE the batch (the driver-side running min is advanced past the
         batch for exactly the keys later point ops touch, one bounded
-        collect per batch, skipped when no later point add exists).
+        aggregate per batch, skipped when no later point add exists).
         Within a batch, list order is ``dst`` ascending per src (``src``
         ascending per dst on the inverse side) — the same order
         ``_replay`` uses for read-your-writes.
@@ -567,22 +574,32 @@ class Transaction:
         }
         min_pos: dict[int, int] = {}
         min_ipos: dict[int, int] = {}
-        if add_srcs:
-            for r in (
-                committed.filter(F.col("src").isin(list(add_srcs)))
-                .groupBy("src")
-                .agg(F.min("pos"))
-                .collect()
-            ):
-                min_pos[r[0]] = r[1]
-        if add_dsts:
-            for r in (
-                committed.filter(F.col("dst").isin(list(add_dsts)))
-                .groupBy("dst")
-                .agg(F.min("ipos"))
-                .collect()
-            ):
-                min_ipos[r[0]] = r[1]
+
+        def fold_mins(edges: DataFrame, srcs: set, dsts: set) -> None:
+            """Lower the running mins to ``edges``' min(pos) per src in
+            ``srcs`` and min(ipos) per dst in ``dsts`` — ONE aggregate over
+            the union of both lookups, so one shuffle instead of two."""
+            parts = [
+                edges.filter(F.col(key).isin(list(keys))).select(
+                    F.lit(fwd).alias("fwd"),
+                    F.col(key).alias("key"),
+                    F.col(order).alias("p"),
+                )
+                for fwd, key, order, keys in (
+                    (True, "src", "pos", srcs),
+                    (False, "dst", "ipos", dsts),
+                )
+                if keys
+            ]
+            if not parts:
+                return
+            keyed = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+            for fwd, k, p in keyed.groupBy("fwd", "key").agg(F.min("p")).collect():
+                mins = min_pos if fwd else min_ipos
+                mins[k] = min(mins.get(k, p), p)
+
+        if f"e_{table}" in self.snap.manifest["tables"]:  # else nothing to look up
+            fold_mins(committed, add_srcs, add_dsts)
 
         def next_pos(s: int) -> int:
             p = min_pos.get(s, 1) - 1
@@ -696,22 +713,7 @@ class Transaction:
                 later_dsts = {e[2] for e in log[idx + 1 :] if e[0] == "add"} | {
                     d for e in log[idx + 1 :] if e[0] == "set_src" for d in e[2]
                 }
-                if later_srcs:
-                    for r in (
-                        b2.filter(F.col("src").isin(list(later_srcs)))
-                        .groupBy("src")
-                        .agg(F.min("pos"))
-                        .collect()
-                    ):
-                        min_pos[r[0]] = min(min_pos.get(r[0], r[1]), r[1])
-                if later_dsts:
-                    for r in (
-                        b2.filter(F.col("dst").isin(list(later_dsts)))
-                        .groupBy("dst")
-                        .agg(F.min("ipos"))
-                        .collect()
-                    ):
-                        min_ipos[r[0]] = min(min_ipos.get(r[0], r[1]), r[1])
+                fold_mins(b2, later_srcs, later_dsts)
         flush_pending(len(log))
 
         df = committed

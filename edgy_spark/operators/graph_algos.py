@@ -343,7 +343,9 @@ def run_fixpoint(
       change-set remains the default for steps without a monotonicity
       argument).  Removed rows change the row count, so ``monotone``
       subsumes ``detect_removals`` (the anti-join probe never runs).
-      Sums accumulate in DECIMAL(38,0) — overflow-proof at any scale.
+      Sums accumulate in DECIMAL(38,0), so compare columns must be
+      integral or scale-0 decimal (checked: a fractional change would
+      round away); overflow needs ~1e19 of row-value mass.
     """
     state, parts = _materialize(state, iter_partitions)
     converged = compare_cols is None  # fixed-round loops are complete by definition
@@ -472,7 +474,20 @@ def _run_fixpoint_monotone(
     round after that is exactly one checkpoint job whose metrics ride the
     materialization."""
     from pyspark.sql import Observation
+    from pyspark.sql import types as T
 
+    dtypes = {f.name: f.dataType for f in state.schema.fields}
+    for c in compare_cols:
+        dt = dtypes[c]
+        if not (
+            isinstance(dt, T.IntegralType)
+            or (isinstance(dt, T.DecimalType) and dt.scale == 0)
+        ):
+            raise TypeError(
+                f"run_fixpoint(monotone=True): compare column {c!r} is "
+                f"{dt.simpleString()}; the signature needs integral or "
+                "scale-0 decimal columns"
+            )
     fields = ["n_rows"] + [
         name for i in range(len(compare_cols)) for name in (f"s_{i}", f"z_{i}")
     ]
@@ -1685,7 +1700,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# k-core decomposition (iterative peeling) — the detect_removals user
+# k-core decomposition (iterative peeling)
 # ---------------------------------------------------------------------------
 
 KCORE_K = 3          # fixture-visible core: 12 nodes across 3 peel rounds
@@ -1707,15 +1722,10 @@ def k_core(
     degree inside that core.  Classic iterative peeling: drop all nodes
     of degree < k, recompute degrees over the survivors, repeat.
 
-    The state SHRINKS — the case :func:`run_fixpoint`'s ``detect_removals``
-    exists for: a round that only removes nodes whose neighbors all left
-    with them changes no surviving row, which the default new-LEFT-JOIN-old
-    change-set cannot see.  (For this particular step such a round is
-    already a fixpoint — vanished nodes contributed nothing to surviving
-    degrees — but the flag costs one anti-join probe on the terminating
-    round only and pins the general always-iterate-until-stable contract,
-    so the first peeling-style user exercises it rather than reasoning its
-    way around it.)
+    The state SHRINKS: a round that only removes nodes whose neighbors
+    all left with them changes no surviving row, which a new-LEFT-JOIN-old
+    change-set cannot see.  The ``monotone`` signature's row count does,
+    so such a round never reads as converged.
 
     Physical shape per round: two broadcast LEFT SEMI joins restrict the
     (materialized-once) doubled edge list to live endpoints, then ONE
@@ -1745,7 +1755,6 @@ def k_core(
         max_iter=max_iter,
         compare_cols=["deg"],
         broadcast_state=broadcast_state,
-        detect_removals=True,  # subsumed by monotone (count sees removals)
         iter_partitions=iter_partitions,
         # peeling only REMOVES nodes and surviving degrees only DROP
         monotone=True,
@@ -1777,7 +1786,7 @@ def _kcore_round_sql(prev: str, this: str, k: int) -> str:
 )
 def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Members of the KCORE_K (= 3)-core of the co-purchase graph with their
-    in-core degrees — peeling on run_fixpoint(detect_removals=True) vs a
+    in-core degrees — peeling on run_fixpoint(monotone=True) vs a
     DuckDB oracle that unrolls KCORE_ORACLE_ROUNDS idempotent peel rounds
     (safely past the measured 3-round fixpoint)."""
     return k_core(copurchase_edges(spark, sf_dir)).orderBy("node")
@@ -1817,8 +1826,9 @@ def k_truss(
     each triangle once, no adjacency lists collected); support counting
     is one map-side-combinable groupBy over the 3 exploded edge sides.
     Edge payloads are two longs — shuffles stay narrow at any scale; as
-    with k-core, rounds are O(max truss number), and detect_removals
-    keeps a removals-only round from reading as converged.
+    with k-core, rounds are O(max truss number), and the monotone
+    signature's row count keeps a removals-only round from reading as
+    converged.
     """
     peel = _truss_peel(k)
     und, _ = _materialize(undirect(edges), iter_partitions)
@@ -1831,7 +1841,6 @@ def k_truss(
         max_iter=max_iter,
         compare_cols=["sup"],
         broadcast_state=broadcast_state,
-        detect_removals=True,  # subsumed by monotone (count sees removals)
         iter_partitions=iter_partitions,
         # peeling only REMOVES edges and surviving supports only DROP
         monotone=True,
@@ -1897,7 +1906,7 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-truss triangle support — the grouped-structure surface the
     reference's traversal demos motivate (app/Main.hs:148-157), one level
     beyond LPA/k-core: triangle-supported communities.  Peeling on
-    run_fixpoint(detect_removals=True) vs a DuckDB oracle unrolling
+    run_fixpoint(monotone=True) vs a DuckDB oracle unrolling
     TRUSS_ORACLE_ROUNDS idempotent rounds past the measured fixpoint."""
     return (
         k_truss(copurchase_edges(spark, sf_dir))

@@ -982,6 +982,7 @@ class EdgyWriter(DataSourceArrowWriter):
             "stats": _ecosystem_stats(
                 self.root, manifest, tables, [self.table]
             ),
+            "schemas": live_schemas(manifest.get("schemas"), tables),
         }
         _link_manifest(self.root, new_manifest, [tables[self.table]])
         _publish_current(self.root, new_version)
@@ -1144,6 +1145,7 @@ class EdgyStreamWriter(DataSourceStreamWriter):
                 "stats": _ecosystem_stats(
                     self.root, manifest, tables, [self.table]
                 ),
+                "schemas": live_schemas(manifest.get("schemas"), tables),
             }
             try:
                 _link_manifest(self.root, new_manifest, [rel])
@@ -1418,6 +1420,15 @@ def _enforce_manifest_checks(
     return None
 
 
+def live_schemas(schemas: dict | None, tables: dict) -> dict:
+    """The recorded read schemas (``edgy_spark.storage`` module docstring)
+    of the relpaths ``tables`` still points at — what every manifest writer
+    carries forward.  A table a writer replaced gets a new relpath: with no
+    entry it reads with footer inference until an engine commit rewrites it."""
+    live = set(tables.values())
+    return {rel: s for rel, s in (schemas or {}).items() if rel in live}
+
+
 def _promote_staging(
     root: str, manifest: dict, key: str, staging: str,
     overwrite: bool, new_version: int, staged: list[str],
@@ -1686,6 +1697,7 @@ def commit_edgy_txn(root: str, txn: str) -> int:
         "stats": _ecosystem_stats(
             root, manifest, tables, [p["table"] for p in pend]
         ),
+        "schemas": live_schemas(manifest.get("schemas"), tables),
     }
     try:
         _link_manifest(root, new_manifest, promoted)

@@ -6,8 +6,20 @@ Layout under a root directory::
 
     root/
       CURRENT                 # pointer CACHE: a recent version number
-      manifest.v3.json        # {"version":3, "next_id":17, "tables":{name:relpath}}
+      manifest.v3.json        # {"version":3, "next_id":17, "tables":{name:relpath},
+                              #  "schemas":{relpath: spark schema json}, ...}
       data/<table>.v3.parquet # immutable parquet per table-version
+
+``schemas`` (optional) records, per table-version relpath the engine wrote,
+the schema Spark reads that parquet back with — the written schema with
+every field nullable.  Snapshot reads pass it to ``spark.read.schema``,
+which skips the one-job footer inference a schema-less
+``spark.read.parquet`` launches on every read.  It is keyed by relpath,
+not table name: a relpath's files never change, so an entry can never
+describe another version.  Entries whose relpath left ``tables`` are
+dropped; a relpath with no entry (older manifests, ``pysource``
+bulk/stream writes) reads with inference, and ``fsck(deep=True)`` checks
+every entry against the files' footers.
 
 A transaction pins the latest version (snapshot pinning: all reads inside
 one transaction see one version — parity with app/Main.hs:175-179's
@@ -70,8 +82,12 @@ class Snapshot:
             # id-equi-joins (rehydrate after id-only algebra) skip their
             # Exchange.  Same parquet-path fallback contract as edge_table.
             return _reconcile_to_schema(self._store.spark.table(tbl), nt)
-        df = self._store.spark.read.parquet(os.path.join(self._store.root, rel))
-        return _reconcile_to_schema(df, nt)
+        return _reconcile_to_schema(self._parquet(rel), nt)
+
+    def _parquet(self, rel: str) -> DataFrame:
+        return _read_parquet(
+            self._store.spark, self._store.root, rel, self.manifest.get("schemas")
+        )
 
     def edge_table(self, table: str) -> DataFrame:
         rel = self.manifest["tables"].get(f"e_{table}")
@@ -86,7 +102,7 @@ class Snapshot:
             # session catalog doesn't know the table (e.g. a fresh session
             # reading an existing store root).
             return self._store.spark.table(tbl)
-        return self._store.spark.read.parquet(os.path.join(self._store.root, rel))
+        return self._parquet(rel)
 
     def attr_index(self, node_type: str, attr: str) -> DataFrame | None:
         """The secondary index ``(attr, id)`` for this snapshot's version of
@@ -122,7 +138,51 @@ class Snapshot:
         tbl = self.manifest.get("bucketed", {}).get(key)
         if tbl is not None and self._store.spark.catalog.tableExists(tbl):
             return self._store.spark.table(tbl)
-        return self._store.spark.read.parquet(os.path.join(self._store.root, rel))
+        return self._parquet(rel)
+
+
+def _read_parquet(
+    spark: SparkSession, root: str, rel: str, schemas: dict | None
+) -> DataFrame:
+    """Read one table version, with its recorded schema when the manifest
+    has one (no inference job), else with footer inference."""
+    recorded = (schemas or {}).get(rel)
+    reader = spark.read
+    if recorded is not None:
+        reader = reader.schema(T.StructType.fromJson(recorded))
+    return reader.parquet(os.path.join(root, rel))
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — how Spark's
+    file sources read back any written schema."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_schema(pf) -> T.StructType:
+    """The schema Spark infers from one parquet footer (``pf`` is a
+    ``pyarrow.parquet.ParquetFile``): the Spark row schema its writer
+    stored, else the Arrow schema converted; every field nullable."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    meta = pf.schema_arrow.metadata or {}
+    stored = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is not None:
+        st = T.StructType.fromJson(json.loads(stored))
+    else:
+        st = from_arrow_schema(pf.schema_arrow)
+    return _as_nullable(st)
 
 
 def _index_key(node_type: str, attr: str) -> str:
@@ -802,6 +862,7 @@ class GraphStore:
         tables = dict(base.manifest["tables"])
         bucketed = dict(base.manifest.get("bucketed", {}))
         table_stats: dict[str, dict] = dict(base.manifest.get("stats", {}))
+        schemas: dict[str, dict] = dict(base.manifest.get("schemas", {}))
         written_paths: list[str] = []
         written_tbls: list[str] = []
         for key, df in changed_tables.items():
@@ -852,6 +913,7 @@ class GraphStore:
                 stat["ndv"] = {}
             table_stats[key] = stat
             tables[key] = relpath
+            schemas[relpath] = _as_nullable(df.schema).jsonValue()
             written_paths.append(relpath)
             if key in check_obs:
                 obs, cond = check_obs[key]
@@ -878,6 +940,8 @@ class GraphStore:
         # fall back (Snapshot.attr_index).
         from pyspark.sql import functions as F  # local: keep module light
 
+        from edgy_spark.sources.pysource import live_schemas
+
         indexes = dict(base.manifest.get("indexes", {}))
         reindex_types = {k[2:] for k in changed_tables if k.startswith("n_")}
         if _reindex:
@@ -892,7 +956,7 @@ class GraphStore:
                 continue
             nt = self.schema.node_type(type_)
             src = _reconcile_to_schema(
-                self.spark.read.parquet(os.path.join(self.root, nrel)), nt
+                _read_parquet(self.spark, self.root, nrel, schemas), nt
             )
             for attr in self.index_attrs.get(type_, ()):
                 a = nt.attr(attr)
@@ -908,8 +972,9 @@ class GraphStore:
                 tbl = self._bucket_table_name(key, new_version, token)
                 from edgy_spark.sources.io import write_bucketed
 
+                idx_df = src.select(val.alias(attr), "id")
                 write_bucketed(
-                    src.select(val.alias(attr), "id"),
+                    idx_df,
                     tbl,
                     [attr],
                     self.index_buckets,
@@ -917,6 +982,7 @@ class GraphStore:
                     path=os.path.join(self.root, relpath),
                 )
                 tables[key] = relpath
+                schemas[relpath] = _as_nullable(idx_df.schema).jsonValue()
                 bucketed[key] = tbl
                 indexes[key] = {
                     "attr": attr,
@@ -970,6 +1036,8 @@ class GraphStore:
             # tables WITHOUT waiting for an AQE runtime replan (the
             # Delta/Iceberg table-stats model) — see read_store_table
             "stats": {k: v for k, v in table_stats.items() if k in tables},
+            # per-relpath read schemas (module docstring)
+            "schemas": live_schemas(schemas, tables),
         }
         try:
             self._write_manifest(manifest)
@@ -1339,6 +1407,7 @@ class GraphStore:
             "checks": dict(self.check_constraints),
             # stats describe the FILES, which are the restored version's
             "stats": dict(old.manifest.get("stats", {})),
+            "schemas": dict(old.manifest.get("schemas", {})),
         }
         self._write_manifest(manifest)
         self._publish(manifest["version"])
@@ -1456,6 +1525,10 @@ class GraphStore:
             "defaults": snap.manifest.get("defaults", {}),
             "checks": dict(snap.manifest.get("checks", {})),
             "stats": dict(snap.manifest.get("stats", {})),
+            # re-keyed like the tables they describe
+            "schemas": {
+                _abs(rel): s for rel, s in snap.manifest.get("schemas", {}).items()
+            },
             "cloned_from": {"root": self.root, "version": snap.version},
         }
         # pin BEFORE the manifest becomes readable: once v0 exists a reader
@@ -1699,8 +1772,10 @@ class GraphStore:
     def fsck(self, deep: bool = False) -> dict:
         """Integrity check of every RETAINED version: manifests parse, every
         referenced table/CDC directory exists and holds parquet files, zone
-        sidecars parse, and (``deep=True``) footers open and their row
-        total matches the manifest's recorded stats.  Returns
+        sidecars parse, and (``deep=True``) footers open, their row
+        total matches the manifest's recorded stats, and every file's
+        footer schema equals the table version's recorded read schema
+        (a wrong entry would otherwise be read silently: reads trust it).  Returns
         ``{"ok", "errors", "warnings", "versions_checked"}`` — it reports,
         never repairs.
 
@@ -1754,15 +1829,25 @@ class GraphStore:
                 if deep and not key.startswith("cdc:"):
                     import pyarrow.parquet as pq
 
+                    recorded = (m.get("schemas") or {}).get(rel)
+                    if recorded is not None:
+                        recorded = T.StructType.fromJson(recorded)
                     rows = 0
                     for n in files:
                         try:
-                            rows += pq.ParquetFile(
-                                os.path.join(d, n)
-                            ).metadata.num_rows
+                            pf = pq.ParquetFile(os.path.join(d, n))
+                            rows += pf.metadata.num_rows
+                            footer = _footer_schema(pf)
                         except Exception as exc:
                             errors.append(
                                 f"v{v} {key}: unreadable footer {n}: {exc!r}"
+                            )
+                            continue
+                        if recorded is not None and footer != recorded:
+                            errors.append(
+                                f"v{v} {key}: recorded schema "
+                                f"{recorded.simpleString()} != footer schema "
+                                f"{footer.simpleString()} of {n}"
                             )
                     stat = (m.get("stats") or {}).get(key)
                     if stat and stat.get("rows") is not None and rows != stat["rows"]:

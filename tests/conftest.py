@@ -98,3 +98,25 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql, *, approx=False):
                     assert a == b, f"row {i}: {sr} != {dr}"
         else:
             assert sr == dr, f"row {i} mismatch:\n  spark={sr}\n  oracle={dr}"
+
+
+# The default run deselects the `slow` marker (pyproject addopts); say how
+# many tests that left out, so a short green run is not read as the suite.
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    if items:
+        stash = items[0].config.stash
+        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + sum(
+            1 for it in items if it.get_closest_marker("slow")
+        )
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow tests deselected (run them with `-m slow`, or "
+            'everything with `-m ""`)'
+        )

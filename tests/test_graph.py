@@ -18,6 +18,14 @@ from edgy_spark.storage import ConflictError
 from tests.test_schema import demo_schema
 
 
+# Most tests here build their own store and take seconds each: they are
+# marked `slow` (excluded by pyproject's default `-m 'not slow'`, run with
+# `pytest -m slow` or `-m ""`).  The unmarked subset keeps the store's
+# read/commit path in the default gate; all but the schema-evolution test
+# share one module-scoped bigBang store (`demo_store`).
+slow = pytest.mark.slow
+
+
 @pytest.fixture()
 def engine(spark, tmp_path):
     return Engine(spark, str(tmp_path / "db"), demo_schema())
@@ -27,16 +35,45 @@ def engine(spark, tmp_path):
 # exercise the same functions the CLI runs
 from edgy_spark.demo import big_bang  # noqa: E402, F401
 
-# r15 (driver verify budget): transactional graph-store integration —
-# multi-second Spark/store wall time per test; excluded from the default
-# run by pyproject's `-m 'not slow'`, run explicitly with `pytest -m slow`.
-pytestmark = pytest.mark.slow
-
 
 @pytest.fixture()
 def populated(engine):
     nodes = engine.run(big_bang)
     return engine, nodes
+
+
+@pytest.fixture(scope="module")
+def demo_store(spark, tmp_path_factory):
+    """One committed bigBang store shared by the fast tests; a test that
+    writes to it only touches nodes it created itself."""
+    engine = Engine(spark, str(tmp_path_factory.mktemp("demo") / "db"), demo_schema())
+    return engine, engine.run(big_bang)
+
+
+def count_jobs(spark, fn, *args):
+    """(result, number of Spark jobs ``fn(*args)`` ran), read through a job
+    group and the public status tracker.  The tracker is fed by an
+    asynchronous listener, so a marker job in its own group is run after
+    the call and awaited: the listener handles events in order, so once it
+    has seen the marker every job of the call is recorded too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, marker = f"count-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn(*args)
+    finally:
+        sc.setJobGroup(marker, "count_jobs marker")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "status tracker never saw the marker job"
+        time.sleep(0.01)
+    return out, len(tracker.getJobIdsForGroup(group))
 
 
 def lookup_person(engine, name: str) -> dict:
@@ -55,20 +92,50 @@ def missing_tools(engine, person_name: str) -> set[str]:
 
 # -- golden workload ------------------------------------------------------
 
-def test_missing_tools_bob(populated):
-    engine, _ = populated
+def test_missing_tools_bob(demo_store):
+    engine, _ = demo_store
     # Bob: needed={Cards,Chips,Poles,TrailMap}; available={Cards(Jane),
     # Poles(Jose), TrailMap(own)} → {Poker Chips}  (FIXTURES.md §1)
     assert missing_tools(engine, "Bob") == {"Poker Chips"}
 
 
-def test_missing_tools_jane(populated):
-    engine, _ = populated
+def test_missing_tools_jane(demo_store):
+    engine, _ = demo_store
     # Jane: hobby=Poker → needed={Cards,Chips}; friends={Jose}→{Poles},
     # own={Cards} → missing={Chips}
     assert missing_tools(engine, "Jane") == {"Poker Chips"}
 
 
+def test_point_op_job_counts(spark, demo_store):
+    """The per-operation Spark job budget in the graph module docstring: a
+    point read is ONE job (the recorded read schema spares the footer
+    inference, the adjacency is put in list order on the driver), and a
+    set_attribute + add_related commit stays within six."""
+    engine, n = demo_store
+    t = engine.read()
+    assert count_jobs(spark, t.get_attribute, n["bob"], "age") == (20, 1)
+    friends, jobs = count_jobs(spark, t.get_related_list, n["bob"], "friend")
+    assert ([f.id for f in friends], jobs) == ([n["jose"].id, n["jane"].id], 1)
+
+    p, o = engine.run(
+        lambda t: (
+            t.new_node("Person", name="Counted", age=1),
+            t.new_node("Object", name="Counter"),
+        )
+    )
+
+    def write(t):
+        t.set_attribute(p, "age", 2)
+        t.add_related(p, "possession", o)
+
+    _, jobs = count_jobs(spark, engine.run, write)
+    assert jobs <= 6, f"set_attribute + add_related commit ran {jobs} jobs"
+    t = engine.read()
+    assert t.get_attribute(p, "age") == 2
+    assert t.get_related_list(p, "possession") == [o]
+
+
+@slow
 def test_lookup_unique_contract(populated):
     engine, _ = populated
     assert lookup_person(engine, "Bob")["age"] == 20
@@ -81,6 +148,7 @@ def test_lookup_unique_contract(populated):
 
 # -- the 12 operations ----------------------------------------------------
 
+@slow
 def test_get_set_attribute(populated):
     engine, n = populated
     t = engine.read()
@@ -89,21 +157,23 @@ def test_get_set_attribute(populated):
     assert engine.read().get_attribute(n["bob"], "age") == 33
 
 
+@slow
 def test_required_attr_missing_at_creation(engine):
     with pytest.raises(TypeError, match="required attribute"):
         engine.run(lambda t: t.new_node("Person", name="NoAge"))
 
 
-def test_get_related_order_is_prepend(populated):
+def test_get_related_order_is_prepend(demo_store):
     # addRelated prepends (Operations.hs:332-334): Bob's friends were added
     # Jane then Jose → list order [Jose, Jane]
-    engine, n = populated
+    engine, n = demo_store
     t = engine.read()
     friends = t.get_related_list(n["bob"], "friend")
     names = [t.get_attribute(f, "name") for f in friends]
     assert names == ["Jose", "Jane"]
 
 
+@slow
 def test_inverse_relation_view(populated):
     # friendOf is a swapped view of the same table — bidirectional
     # consistency by construction (Operations.hs:314-319)
@@ -114,6 +184,7 @@ def test_inverse_relation_view(populated):
     assert names == ["Bob", "Jane"]
 
 
+@slow
 def test_is_related(populated):
     engine, n = populated
     t = engine.read()
@@ -121,6 +192,7 @@ def test_is_related(populated):
     assert not t.is_related(n["jane"], "friend", n["bob"])  # directed!
 
 
+@slow
 def test_symmetric_spouse(populated):
     # marry inserts ONE logical edge visible from both ends (Schema.hs:298-307)
     engine, n = populated
@@ -129,6 +201,7 @@ def test_symmetric_spouse(populated):
     assert t.get_related(n["jane"], "spouse") == n["bob"]
 
 
+@slow
 def test_divorce_and_remarry(populated):
     engine, n = populated
     engine.run(lambda t: t.remove_related(n["bob"], "spouse", n["jane"]))
@@ -139,6 +212,7 @@ def test_divorce_and_remarry(populated):
     assert engine.read().get_related(n["jose"], "spouse") == n["jane"]
 
 
+@slow
 def test_parallel_edges_and_remove_all(populated):
     # addRelated has no dedup; removeRelated removes ALL copies
     # (Operations.hs:332-334, 347-349 — SURVEY §7.4 trap 2)
@@ -155,6 +229,7 @@ def test_parallel_edges_and_remove_all(populated):
     assert engine.read().get_related_list(n["jane"], "friend") == []
 
 
+@slow
 def test_set_related_replaces(populated):
     engine, n = populated
     engine.run(
@@ -168,6 +243,7 @@ def test_set_related_replaces(populated):
     ]
 
 
+@slow
 def test_clear_related(populated):
     engine, n = populated
     engine.run(lambda t: t.clear_related(n["bob"], "friend"))
@@ -177,6 +253,7 @@ def test_clear_related(populated):
     assert [p.id for p in t.get_related_list(n["jose"], "friendOf")] == [n["jane"].id]
 
 
+@slow
 def test_delete_node_cascades(populated):
     # deleteNode patches every neighbor's inverse list (Operations.hs:197-218)
     # and leaves no dangling edges in any table (§7.4 trap 5)
@@ -194,6 +271,7 @@ def test_delete_node_cascades(populated):
         ).count() == 0
 
 
+@slow
 def test_cardinality_checked_on_read_not_write(populated):
     # Nothing stops addRelated from growing Optional past one edge; the
     # violation surfaces on getRelated (Operations.hs:284-287, §7.4 trap 3)
@@ -205,6 +283,7 @@ def test_cardinality_checked_on_read_not_write(populated):
     assert len(t.get_related_list(n["bob"], "spouse")) == 2
 
 
+@slow
 def test_cardinality_enforcement_scan(populated):
     engine, n = populated
     assert engine.check_cardinality("spouse").count() == 0
@@ -215,6 +294,7 @@ def test_cardinality_enforcement_scan(populated):
 
 # -- transaction semantics ------------------------------------------------
 
+@slow
 def test_atomic_read_modify_write(populated):
     # lookup + mutation in one txn, one snapshot (app/Main.hs:175-179)
     engine, n = populated
@@ -229,6 +309,7 @@ def test_atomic_read_modify_write(populated):
     assert names == ["Trail Map", "Trekking Poles"]  # prepend order
 
 
+@slow
 def test_read_your_own_writes_in_txn(engine):
     def fn(t):
         a = t.new_node("Person", name="A", age=1)
@@ -243,6 +324,7 @@ def test_read_your_own_writes_in_txn(engine):
     assert engine.read().get_attribute(b, "name") == "B2"
 
 
+@slow
 def test_conflict_detection(populated):
     engine, n = populated
     txn = engine.store.snapshot()
@@ -259,6 +341,7 @@ def test_conflict_detection(populated):
     assert engine.read().get_attribute(n["bob"], "age") == 70
 
 
+@slow
 def test_snapshot_isolation(populated):
     engine, n = populated
     old = engine.snapshot()
@@ -269,6 +352,7 @@ def test_snapshot_isolation(populated):
 
 # -- bag vs set semantics (§7.4 trap 1) -----------------------------------
 
+@slow
 def test_bag_difference_vs_anti_join(populated):
     engine, n = populated
     # give Bob a second Poker hobby edge → needed has duplicate Cards/Chips
@@ -287,6 +371,7 @@ def test_bag_difference_vs_anti_join(populated):
     assert anti.count(n["chips"].id) == 2
 
 
+@slow
 def test_snapshot_diff_cdc(engine):
     """snapshot_diff reports exactly the rows that changed between versions,
     as insert/delete pairs, across non-adjacent versions too."""
@@ -322,6 +407,7 @@ def test_snapshot_diff_cdc(engine):
     ) == [("Alicia", "insert"), ("Bob", "insert")]
 
 
+@slow
 def test_snapshot_diff_edges_cdc(engine):
     """Edge CDC: adding then removing a friendship shows up as exactly the
     inserted/deleted edge rows (both directions of the symmetric pair)."""
@@ -409,6 +495,7 @@ def test_schema_evolution_reads_old_versions(spark, tmp_path):
 
 # -- write-behind / backpressure ------------------------------------------
 
+@slow
 def test_write_behind_applies_queued_mutations_in_order(spark, tmp_path):
     """The async admission-bounded runner (Operations.hs:76-79 analogue)
     must produce exactly the state sequential commits would."""
@@ -433,6 +520,7 @@ def test_write_behind_applies_queued_mutations_in_order(spark, tmp_path):
         assert t.get_attribute(bob, "age") == 21
 
 
+@slow
 def test_write_behind_surfaces_failures_on_flush(spark, tmp_path):
     """Background failures must not vanish: flush raises WriteBehindError
     carrying the failed transaction's index and exception, and the other
@@ -461,6 +549,7 @@ def test_write_behind_surfaces_failures_on_flush(spark, tmp_path):
     assert t.is_related(bob, "possession", chips)
 
 
+@slow
 def test_binary_attribute_roundtrip_through_commit_and_snapshot(spark, tmp_path):
     """Opaque host payloads: a `binary` attribute (the reference's arbitrary
     Typeable+Binary latitude, Schema.hs:148-155) must round-trip bytes —
@@ -508,6 +597,7 @@ def test_binary_attribute_roundtrip_through_commit_and_snapshot(spark, tmp_path)
 
 # -- r06 review regressions ------------------------------------------------
 
+@slow
 def test_txn_attr_updates_do_not_clobber_other_nodes(engine):
     """Two nodes updating DIFFERENT attrs in one txn: each keeps its other
     attributes (the commit merge must mask per-(node, attr), not per-attr)."""
@@ -531,6 +621,7 @@ def test_txn_attr_updates_do_not_clobber_other_nodes(engine):
     assert t.get_attribute(n2, "age") == 21
 
 
+@slow
 def test_bulk_edges_respect_cascade_delete_and_later_removes(spark, engine):
     """Bulk batches obey the same semantics as staged ops: cascade delete
     applies, and removes issued AFTER the bulk apply to its rows."""
@@ -554,6 +645,7 @@ def test_bulk_edges_respect_cascade_delete_and_later_removes(spark, engine):
     assert t.get_related(p[2], "friend") == []  # p3 deleted -> edge gone
 
 
+@slow
 def test_bulk_edges_symmetric_visible_from_both_ends(spark, engine):
     def seed(t):
         return (
@@ -572,6 +664,7 @@ def test_bulk_edges_symmetric_visible_from_both_ends(spark, engine):
     assert t.get_related(b, "spouse").id == a.id  # mirrored orientation
 
 
+@slow
 def test_bulk_edges_positions_stack_below_existing(spark, engine):
     """Bulk rows must take positions BELOW existing edges (prepend), never
     colliding with previously prepended pos values."""
@@ -596,9 +689,11 @@ def test_bulk_edges_positions_stack_below_existing(spark, engine):
     assert len(poss) == len(set(poss)), f"pos collision: {poss}"
 
 
-def test_set_related_then_add_orders_consistently(engine):
+def test_set_related_then_add_orders_consistently(demo_store):
     """add_related after set_related prepends BELOW the set block, and the
     committed order equals the in-txn read-your-writes order."""
+    engine, _ = demo_store
+
     def seed(t):
         return [t.new_node("Person", name=f"R{i}", age=i) for i in range(4)]
 
@@ -616,6 +711,7 @@ def test_set_related_then_add_orders_consistently(engine):
     assert committed == in_txn["order"] == [p[3].id, p[1].id, p[2].id]
 
 
+@slow
 def test_clear_and_empty_set_validate_source_type(engine):
     from edgy_spark.graph import Transaction
 
@@ -627,6 +723,7 @@ def test_clear_and_empty_set_validate_source_type(engine):
         t.set_related(nodes["poker"], "friend", [])
 
 
+@slow
 def test_reads_of_node_deleted_in_txn_raise(engine):
     nodes = engine.run(big_bang)
 
@@ -640,6 +737,7 @@ def test_reads_of_node_deleted_in_txn_raise(engine):
     engine.run(txn)
 
 
+@slow
 def test_nodeset_filter_sees_optional_defaults(spark, tmp_path):
     """A filter on an optional attr's default value must match nodes that
     never wrote it (stored NULL reads as the default in BOTH layers)."""
@@ -657,6 +755,7 @@ def test_nodeset_filter_sees_optional_defaults(spark, tmp_path):
     assert got == {"a": "none", "b": "x"}
 
 
+@slow
 def test_self_loop_clear_consistent_in_txn_and_committed(engine):
     """Clearing a node's forward edges removes a self-loop from its OWN
     inverse view too — in-txn read must equal committed state."""
@@ -679,6 +778,7 @@ def test_self_loop_clear_consistent_in_txn_and_committed(engine):
     assert t.get_related(k, "friend") == [] and t.get_related(k, "friendOf") == []
 
 
+@slow
 def test_add_after_bulk_prepends_above_the_batch(spark, engine):
     """ADVICE r06: an add_related issued AFTER bulk_add_edges on the same
     src must commit ABOVE the batch (prepend semantics are log-ordered),
@@ -708,6 +808,7 @@ def test_add_after_bulk_prepends_above_the_batch(spark, engine):
     assert orders["in_txn"] == committed  # read-your-writes == committed
 
 
+@slow
 def test_bulk_before_add_matches_point_op_equivalent(spark, engine):
     """A txn issuing [add, bulk] commits the batch ON TOP of the earlier
     add — the same order as issuing every edge as a point op in sequence."""
@@ -728,6 +829,7 @@ def test_bulk_before_add_matches_point_op_equivalent(spark, engine):
     assert committed == [p[1].id, p[2].id, p[3].id]
 
 
+@slow
 def test_bulk_edges_in_txn_cardinality_check_on_read(spark, engine):
     """Bulk rows participate in read-time cardinality shaping (ADVICE r06:
     they previously bypassed _replay entirely): a batch that grows an
@@ -754,6 +856,7 @@ def test_bulk_edges_in_txn_cardinality_check_on_read(spark, engine):
         engine.run(txn)
 
 
+@slow
 def test_bulk_edges_visible_to_in_txn_inverse_reads(spark, engine):
     """Read-your-writes holds from the INVERSE side of a pending batch."""
     def seed(t):
@@ -777,6 +880,7 @@ def test_bulk_edges_visible_to_in_txn_inverse_reads(spark, engine):
     assert seen == {"fwd": [b.id], "inv": [a.id], "is": True}
 
 
+@slow
 def test_hop_and_rehydrate_see_optional_defaults(spark, tmp_path):
     """ADVICE r06: the default-coalescing projection applied only in scan;
     NodeSets built by hop() or rehydrate() read raw NULLs, so a

@@ -174,6 +174,32 @@ def test_run_fixpoint_monotone_require_converged_raises(spark):
         )
 
 
+def test_run_fixpoint_monotone_rejects_fractional_compare_columns(spark):
+    """The signature sums compare columns as DECIMAL(38,0): a 0.25 step
+    would round away and read as converged, so monotone mode refuses
+    fractional columns up front (integral and scale-0 decimals pass)."""
+    import pytest
+
+    def quarter(s):
+        return s.select("node", (F.col("v") / 4).alias("v"))
+
+    for typ in ("double", "decimal(10,2)"):
+        state = spark.createDataFrame([(1, 1)], "node long, v long").select(
+            "node", F.col("v").cast(typ).alias("v")
+        )
+        with pytest.raises(TypeError, match="compare column 'v'"):
+            run_fixpoint(
+                state, quarter, max_iter=3, compare_cols=["v"], monotone=True
+            )
+    state = spark.createDataFrame([(1, 1)], "node long, v long").select(
+        "node", F.col("v").cast("decimal(20,0)").alias("v")
+    )
+    out = run_fixpoint(
+        state, lambda s: s, max_iter=3, compare_cols=["v"], monotone=True
+    )
+    assert [tuple(r) for r in out.collect()] == [(1, 1)]
+
+
 def test_sssp_weighted_nearest_hub(spark):
     """Hand-checkable weighted distances: hub = degree>=3 node (only 3)."""
     wedges = spark.createDataFrame(

@@ -202,6 +202,35 @@ def test_bucketed_engine_point_ops_correct(spark, tmp_path):
     assert t.get_attribute(t.get_related(nodes["bob"], "spouse"), "name") == "Jane"
 
 
+def test_set_attribute_commit_broadcasts_updates(spark, tmp_path):
+    """A set_attribute commit joins its few update rows to the node table
+    by broadcasting them.  Unhinted, the createDataFrame side has no size
+    estimate and the join plans as a sort-merge join that hash-partitions
+    the WHOLE node table on id."""
+    from edgy_spark.graph import Engine
+    from tests.test_graph import big_bang
+    from tests.test_schema import demo_schema
+
+    engine = Engine(spark, str(tmp_path / "db"), demo_schema())
+    nodes = engine.run(big_bang)
+    written = {}
+    commit = engine.store.commit
+
+    def capture(base, changed_tables, **kwargs):
+        written.update(changed_tables)
+        return commit(base, changed_tables, **kwargs)
+
+    engine.store.commit = capture
+    engine.run(lambda t: t.set_attribute(nodes["bob"], "age", 33))
+    df = written["n_Person"]
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "BroadcastHashJoin" in plan, plan
+    assert "hashpartitioning" not in plan, plan
+    assert engine.read().get_attribute(nodes["bob"], "age") == 33
+
+
 def test_decontaminate_broadcasts_eval_shingles(spark):
     """Decontamination's 100 TB contract: the tiny eval side broadcasts, so
     the corpus shingle stream is never shuffled before the overlap count."""
