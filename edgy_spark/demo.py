@@ -103,13 +103,17 @@ def lookup(engine: Engine, node_type: str, name: str, snap=None):
 
 def missing_tools(engine: Engine, person_name: str) -> list[str]:
     """missingTools (/root/reference/app/Main.hs:148-157):
-    (p.hobby.tool) bag-minus (p.friend.possession ++ p.possession)."""
+    (p.hobby.tool) bag-minus (p.friend.possession ++ p.possession).
+
+    On a store whose tables fit the driver's Arrow tier the seed is
+    filtered once and every step, the terminal included, runs no Spark
+    job (see edgy_spark.query)."""
     snap = engine.snapshot()
     p = NodeSet.scan(snap, engine.schema, "Person").filter(name=person_name)
     needed = p.hop("hobby").hop("tool")
     available = p.hop("friend").hop("possession").union(p.hop("possession"))
     missing = needed.minus_bag(available).rehydrate()
-    return sorted(r["name"] for r in missing.df.select("name").collect())
+    return sorted(missing.values("name"))
 
 
 def _edge_cmd(engine: Engine, op: str, rel: str, name1: str, name2: str) -> None:

@@ -40,16 +40,26 @@ Semantics preserved (SURVEY §7.4):
 
 These are POINT operations (the reference's entire workload is point ops on
 a 9-node graph), so their cost is Spark job latency, and the budget is kept
-in jobs (pinned by tests/test_graph.py::test_point_op_job_counts):
+in jobs (pinned by tests/test_graph.py::test_point_op_job_counts and its
+forced-Spark twin).  Tables small enough for the driver are served by the
+store's Arrow tier (``Snapshot.local``, see edgy_spark.storage):
 
-- ``get_attribute`` / ``get_related_list`` / ``all_nodes``: ONE job each —
-  store reads carry the manifest's recorded schema (no footer-inference
-  job) and adjacency/id order is sorted on the driver after the collect;
-- a ``set_attribute`` + ``add_related`` commit: at most six (five today) —
-  the prepend-position lookup (one aggregate: its shuffle stage and its
-  result are a job each under AQE), the broadcast of the update rows, and
-  one write per changed table; node types the transaction did not touch
-  are not read.
+- ``get_attribute`` / ``get_related_list`` / ``all_nodes``: ZERO jobs — a
+  vectorised Arrow filter over the cached table version; values have the
+  types ``collect`` returns;
+- a ``set_attribute`` + ``add_related`` commit: ONE write job per
+  rewritten table — the prepend mins come from the cached adjacency and
+  the next node/edge version is built in Arrow and written as a
+  LocalRelation; node types the transaction did not touch are not read.
+
+A table above the tier's size limit, and an edge table with a bulk batch
+staged, take the Spark path: one job per point read (the manifest's
+recorded schema spares the footer inference; list order is sorted on the
+driver), and at most six for that commit — the prepend-position aggregate
+(its shuffle stage and its result are a job each under AQE), the
+broadcast of the update rows, and one write per changed table.  Driver
+rows enter Spark only as Arrow LocalRelations (``storage.local_df``),
+never through ``createDataFrame`` on a Python list.
 
 Set-at-a-time analytics over the same tables — scans,
 multi-hop joins, bag difference — live in ``edgy_spark.query``; at 100 TB
@@ -61,11 +71,23 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from edgy_spark.schema import Cardinality, CardinalityError, GraphSchema
-from edgy_spark.storage import ConflictError, GraphStore, Snapshot
+from edgy_spark.storage import (
+    EDGE_STRUCT,
+    ConflictError,
+    GraphStore,
+    Snapshot,
+    arrow_table,
+    local_df,
+    to_rows,
+)
 
 
 @dataclass(frozen=True)
@@ -132,12 +154,17 @@ class Transaction:
             if row["id"] == node.id:
                 v = row.get(name)
                 return attr.default if v is None and not attr.required else v
-        rows = (
-            self.snap.nodes(node.node_type)
-            .filter(F.col("id") == node.id)
-            .select(name)
-            .collect()
-        )
+        tbl = self.snap.local(f"n_{node.node_type}")
+        if tbl is not None:
+            hit = tbl.filter(pc.equal(tbl["id"], node.id)).select([name])
+            rows = to_rows(hit, T.StructType([T.StructField(name, attr.spark_type())]))
+        else:
+            rows = (
+                self.snap.nodes(node.node_type)
+                .filter(F.col("id") == node.id)
+                .select(name)
+                .collect()
+            )
         if not rows:
             raise KeyError(f"no {node.node_type} node with id {node.id}")
         v = rows[0][0]
@@ -166,13 +193,14 @@ class Transaction:
         """Universe existence-relation scan (app/Main.hs:132-136)."""
         self.schema.node_type(node_type)
         dead = self._deleted.get(node_type, set())
-        # sorted on the driver: collect() already brings every id here, and
-        # an orderBy would add a sampling job and a shuffle
-        ids = sorted(
-            r[0]
-            for r in self.snap.nodes(node_type).select("id").collect()
-            if r[0] not in dead
-        )
+        # sorted on the driver: every id comes here anyway, and an orderBy
+        # would add a sampling job and a shuffle
+        tbl = self.snap.local(f"n_{node_type}")
+        if tbl is not None:
+            committed = tbl["id"].to_pylist()
+        else:
+            committed = [r[0] for r in self.snap.nodes(node_type).select("id").collect()]
+        ids = sorted(i for i in committed if i not in dead)
         ids += [
             row["id"] for row in self._new_nodes.get(node_type, []) if row["id"] not in dead
         ]
@@ -244,15 +272,20 @@ class Transaction:
             key, order, other = "src", "pos", "dst"
         else:
             key, order, other = "dst", "ipos", "src"
-        # one job: the adjacency is collected whole anyway, so it is put in
-        # list order on the driver (an orderBy costs a sampling job and a
-        # shuffle on top)
-        rows = (
-            self.snap.edge_table(side.table)
-            .filter(F.col(key) == node.id)
-            .select(order, other)
-            .collect()
-        )
+        # the adjacency is fetched whole (an Arrow filter, or one Spark job)
+        # and put in list order on the driver: an orderBy would cost a
+        # sampling job and a shuffle on top
+        tbl = self.snap.local(f"e_{side.table}")
+        if tbl is not None:
+            hit = tbl.filter(pc.equal(tbl[key], node.id))
+            rows = zip(hit[order].to_pylist(), hit[other].to_pylist())
+        else:
+            rows = (
+                self.snap.edge_table(side.table)
+                .filter(F.col(key) == node.id)
+                .select(order, other)
+                .collect()
+            )
         adj = [v for _, v in sorted((r[0], r[1]) for r in rows)]
         adj = self._replay(side, node.id, adj)
         dead = self._deleted.get(side.target, set())
@@ -399,46 +432,56 @@ class Transaction:
             ]
             if not (dead or updates or new_rows):
                 continue  # untouched type: its table is never read
+            # per-(node, attr) set-mask: vals.get(name) is None BOTH for
+            # "not updated by this node" and "updated to null", and the set
+            # of updated attrs differs per node — a single global
+            # updated-attr set would clobber other nodes' untouched attrs
+            # with NULL (one txn updating x on node1 and y on node2 must
+            # not null node1.y)
+            upd = _update_rows(nt, updates) if updates else None
+            new_tbl = arrow_table(new_rows, nt.struct_type()) if new_rows else None
+            live_upd = [i for i in updates if i not in dead]
+            base_tbl = self.snap.local(f"n_{node_type}")
+            if base_tbl is not None:
+                changed[f"n_{node_type}"] = _next_node_table(base_tbl, dead, upd, new_tbl)
+                if self.engine.capture_cdc:
+                    # commit-time change capture from STAGED state, on the
+                    # driver: the touched rows of the cached base version
+                    pre = base_tbl.filter(pc.is_in(base_tbl["id"], pa.array(live_upd, pa.int64())))
+                    parts = [
+                        (new_tbl, "insert"),
+                        (_next_node_table(pre, set(), upd, None), "update_postimage"),
+                    ]
+                    if self.engine.capture_cdc == "full":
+                        parts.append((pre, "update_preimage"))
+                    parts.append((
+                        base_tbl.filter(pc.is_in(base_tbl["id"], pa.array(list(dead), pa.int64()))),
+                        "delete",
+                    ))
+                    parts = [
+                        t.cast(base_tbl.schema).append_column(
+                            "_change", pa.array([change] * t.num_rows, pa.string())
+                        )
+                        for t, change in parts
+                        if t is not None and t.num_rows
+                    ]
+                    if parts:
+                        cdc[f"n_{node_type}"] = pa.concat_tables(parts)
+                continue
             base = self.snap.nodes(node_type)
             df = base
             if dead:
                 df = df.filter(~F.col("id").isin(list(dead)))
-            if updates:
-                # per-(node, attr) set-mask: vals.get(name) is None BOTH for
-                # "not updated by this node" and "updated to null", and the
-                # set of updated attrs differs per node — a single global
-                # updated-attr set would clobber other nodes' untouched
-                # attrs with NULL (one txn updating x on node1 and y on
-                # node2 must not null node1.y)
-                upd_set = {a for vals in updates.values() for a in vals}
-                upd_rows = [
-                    {
-                        "id": i,
-                        **{a: vals.get(a) for a in upd_set},
-                        **{f"__set_{a}": (a in vals) for a in upd_set},
-                    }
-                    for i, vals in updates.items()
-                ]
-                from pyspark.sql import types as T
-
-                by_name = {f.name: f.dataType for f in nt.struct_type().fields}
-                upd_struct = T.StructType(
-                    [T.StructField("id", T.LongType(), False)]
-                    + [T.StructField(a, by_name[a], True) for a in sorted(upd_set)]
-                    + [
-                        T.StructField(f"__set_{a}", T.BooleanType(), False)
-                        for a in sorted(upd_set)
-                    ]
-                )
-                upd = spark.createDataFrame(upd_rows, upd_struct).select(
+            if upd is not None:
+                upd_set = [c[len("__set_"):] for c in upd.column_names if c.startswith("__set_")]
+                u = local_df(spark, upd).select(
                     F.col("id").alias("_uid"),
-                    *[F.col(a).alias(f"_u_{a}") for a in sorted(upd_set)],
-                    *[F.col(f"__set_{a}") for a in sorted(upd_set)],
+                    *[F.col(a).alias(f"_u_{a}") for a in upd_set],
+                    *[F.col(f"__set_{a}") for a in upd_set],
                 )
-                # broadcast: the update rows come from a driver dict, but a
-                # createDataFrame scan has no size estimate, so unhinted
-                # this plans a sort-merge join that shuffles the whole table
-                df = df.join(F.broadcast(upd), df.id == upd._uid, "left").select(
+                # broadcast: keeps the join off a sort-merge plan that would
+                # hash-partition the whole node table on id
+                df = df.join(F.broadcast(u), df.id == u._uid, "left").select(
                     "id",
                     *[
                         (
@@ -454,8 +497,8 @@ class Transaction:
                         for a in nt.attrs
                     ],
                 )
-            if new_rows:
-                df = df.unionByName(spark.createDataFrame(new_rows, nt.struct_type()))
+            if new_tbl is not None:
+                df = df.unionByName(local_df(spark, new_tbl, nt.struct_type()))
             changed[f"n_{node_type}"] = df
             if self.engine.capture_cdc:
                 # commit-time change capture from STAGED state — O(rows
@@ -464,13 +507,12 @@ class Transaction:
                 # zero rows (insert excluded by `dead`, delete preimage
                 # absent from `base`).
                 parts: list[DataFrame] = []
-                if new_rows:
+                if new_tbl is not None:
                     parts.append(
-                        spark.createDataFrame(
-                            new_rows, nt.struct_type()
-                        ).withColumn("_change", F.lit("insert"))
+                        local_df(spark, new_tbl, nt.struct_type()).withColumn(
+                            "_change", F.lit("insert")
+                        )
                     )
-                live_upd = [i for i in updates if i not in dead]
                 if live_upd:
                     # postimages built DRIVER-side (ADVICE r07): the
                     # updated values are already in the updates dict;
@@ -492,11 +534,9 @@ class Transaction:
                     ]
                     if post_rows:
                         parts.append(
-                            spark.createDataFrame(
-                                post_rows, nt.struct_type()
-                            ).withColumn(
-                                "_change", F.lit("update_postimage")
-                            )
+                            local_df(
+                                spark, arrow_table(post_rows, nt.struct_type())
+                            ).withColumn("_change", F.lit("update_postimage"))
                         )
                     if self.engine.capture_cdc == "full":
                         # Delta-CDF full shape: the preimages are the
@@ -505,11 +545,9 @@ class Transaction:
                         pre_rows = [pre[i] for i in live_upd if i in pre]
                         if pre_rows:
                             parts.append(
-                                spark.createDataFrame(
-                                    pre_rows, nt.struct_type()
-                                ).withColumn(
-                                    "_change", F.lit("update_preimage")
-                                )
+                                local_df(
+                                    spark, arrow_table(pre_rows, nt.struct_type())
+                                ).withColumn("_change", F.lit("update_preimage"))
                             )
                 if dead:
                     parts.append(
@@ -539,8 +577,8 @@ class Transaction:
             cdc=cdc if self.engine.capture_cdc else None,
         )
 
-    def _rebuild_edges(self, table: str) -> DataFrame | None:
-        """Fold the op log into the edge table with pure DataFrame transforms.
+    def _rebuild_edges(self, table: str) -> DataFrame | pa.Table | None:
+        """Fold the op log into the edge table.
 
         The log is processed strictly IN ORDER so prepend semantics hold
         across mixed point and bulk mutations (ADVICE r06): a batch's rows
@@ -552,6 +590,10 @@ class Transaction:
         Within a batch, list order is ``dst`` ascending per src (``src``
         ascending per dst on the inverse side) — the same order
         ``_replay`` uses for read-your-writes.
+
+        With no bulk batch staged and the committed table on the driver
+        (``Snapshot.local``), the fold runs in Arrow and returns the next
+        version as a ``pyarrow.Table``; otherwise it is a DataFrame plan.
         """
         log = self._edge_log.get(table, [])
         # cascade delete: endpoints of this table's relation
@@ -564,7 +606,10 @@ class Transaction:
         dst_dead = self._deleted.get(fwd.target, set())
         if not log and not src_dead and not dst_dead:
             return None
-        committed = self.snap.edge_table(table)
+        local = (
+            None if any(e[0] == "bulk" for e in log) else self.snap.local(f"e_{table}")
+        )
+        committed = self.snap.edge_table(table) if local is None else None
         spark = self.engine.spark
 
         # current mins for prepend positions (only staged keys — small)
@@ -574,6 +619,11 @@ class Transaction:
         }
         min_pos: dict[int, int] = {}
         min_ipos: dict[int, int] = {}
+
+        def fold(found) -> None:
+            for fwd_, k, p in found:
+                mins = min_pos if fwd_ else min_ipos
+                mins[k] = min(mins.get(k, p), p)
 
         def fold_mins(edges: DataFrame, srcs: set, dsts: set) -> None:
             """Lower the running mins to ``edges``' min(pos) per src in
@@ -585,20 +635,18 @@ class Transaction:
                     F.col(key).alias("key"),
                     F.col(order).alias("p"),
                 )
-                for fwd, key, order, keys in (
-                    (True, "src", "pos", srcs),
-                    (False, "dst", "ipos", dsts),
-                )
-                if keys
+                for fwd, key, order, keys in _min_lookups(srcs, dsts)
             ]
-            if not parts:
-                return
-            keyed = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-            for fwd, k, p in keyed.groupBy("fwd", "key").agg(F.min("p")).collect():
-                mins = min_pos if fwd else min_ipos
-                mins[k] = min(mins.get(k, p), p)
+            if parts:
+                keyed = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+                fold(keyed.groupBy("fwd", "key").agg(F.min("p")).collect())
 
-        if f"e_{table}" in self.snap.manifest["tables"]:  # else nothing to look up
+        if local is not None:
+            for fwd_, key, order, keys in _min_lookups(add_srcs, add_dsts):
+                got = local.filter(pc.is_in(local[key], pa.array(list(keys), pa.int64())))
+                got = got.group_by(key).aggregate([(order, "min")])
+                fold((fwd_, k, p) for k, p in zip(got[key].to_pylist(), got[f"{order}_min"].to_pylist()))
+        elif f"e_{table}" in self.snap.manifest["tables"]:  # else nothing to look up
             fold_mins(committed, add_srcs, add_dsts)
 
         def next_pos(s: int) -> int:
@@ -611,7 +659,8 @@ class Transaction:
             min_ipos[d] = p
             return p
 
-        conds: list[tuple[int, "F.Column"]] = []  # (log idx, removal pred)
+        # removals as (log idx, (column, value) pairs that all match)
+        conds: list[tuple[int, tuple]] = []
         # staged rows land in SEGMENTS in log order: point rows accumulate
         # in `pending` (eagerly filtered by later point ops, exact list
         # semantics) and are flushed to a segment whenever a bulk batch
@@ -621,17 +670,16 @@ class Transaction:
         segments: list[tuple[int, DataFrame]] = []  # (flush/bulk idx, rows)
         pending: list[tuple[int, int, int, int]] = []
 
+        def pending_table() -> pa.Table:
+            return arrow_table(
+                [{"src": s, "dst": d, "pos": p, "ipos": ip} for s, d, p, ip in pending],
+                EDGE_STRUCT,
+            )
+
         def flush_pending(at_idx: int) -> None:
             nonlocal pending
             if pending:
-                seg = spark.createDataFrame(
-                    [
-                        {"src": s, "dst": d, "pos": p, "ipos": ip}
-                        for s, d, p, ip in pending
-                    ],
-                    "src long, dst long, pos long, ipos long",
-                )
-                segments.append((at_idx, seg))
+                segments.append((at_idx, local_df(spark, pending_table(), EDGE_STRUCT)))
                 pending = []
 
         for idx, entry in enumerate(log):
@@ -641,19 +689,19 @@ class Transaction:
                 pending.append((s, d, next_pos(s), next_ipos(d)))
             elif op == "remove":
                 _, s, d = entry
-                conds.append((idx, (F.col("src") == s) & (F.col("dst") == d)))
+                conds.append((idx, (("src", s), ("dst", d))))
                 pending = [r for r in pending if not (r[0] == s and r[1] == d)]
             elif op == "clear_src":
                 s = entry[1]
-                conds.append((idx, F.col("src") == s))
+                conds.append((idx, (("src", s),)))
                 pending = [r for r in pending if r[0] != s]
             elif op == "clear_dst":
                 d = entry[1]
-                conds.append((idx, F.col("dst") == d))
+                conds.append((idx, (("dst", d),)))
                 pending = [r for r in pending if r[1] != d]
             elif op == "set_src":
                 _, s, dsts = entry
-                conds.append((idx, F.col("src") == s))
+                conds.append((idx, (("src", s),)))
                 pending = [r for r in pending if r[0] != s]
                 for i, d in enumerate(dsts):
                     pending.append((s, d, i, next_ipos(d)))
@@ -714,18 +762,43 @@ class Transaction:
                     d for e in log[idx + 1 :] if e[0] == "set_src" for d in e[2]
                 }
                 fold_mins(b2, later_srcs, later_dsts)
+
+        if local is not None:
+            # no batch: every removal applies to the committed rows, and the
+            # pending rows were already filtered by the removals after them
+            drop = pa.array(np.zeros(local.num_rows, bool))
+            for _, cond in conds:
+                match = pa.array(np.ones(local.num_rows, bool))
+                for col, v in cond:
+                    match = pc.and_(match, pc.equal(local[col], v))
+                drop = pc.or_(drop, match)
+            for col, ids in (("src", src_dead), ("dst", dst_dead)):
+                if ids:
+                    drop = pc.or_(drop, pc.is_in(local[col], pa.array(list(ids), pa.int64())))
+            pending = [r for r in pending if r[0] not in src_dead and r[1] not in dst_dead]
+            return pa.concat_tables(
+                [local.filter(pc.invert(drop)), pending_table().cast(local.schema)]
+            )
+
         flush_pending(len(log))
+
+        def cond_col(cond: tuple):
+            out = None
+            for col, v in cond:
+                c = F.col(col) == v
+                out = c if out is None else out & c
+            return out
 
         df = committed
         for _, cond in conds:
-            df = df.filter(~cond)
+            df = df.filter(~cond_col(cond))
         for seg_idx, seg in segments:
             # removal/clear/set predicates issued AFTER a segment apply to
             # its rows, earlier ones do not (pending rows were filtered
             # eagerly before flushing, so only later conds remain)
             for cond_idx, cond in conds:
                 if cond_idx > seg_idx:
-                    seg = seg.filter(~cond)
+                    seg = seg.filter(~cond_col(cond))
             df = df.unionByName(seg)
         # cascade delete is transaction-wide: applies to committed rows and
         # every staged segment — without this, bulk rows escaped
@@ -735,6 +808,67 @@ class Transaction:
         if dst_dead:
             df = df.filter(~F.col("dst").isin(list(dst_dead)))
         return df
+
+
+def _min_lookups(srcs: set, dsts: set):
+    """The prepend-min lookups a fold needs: (forward?, key column, position
+    column, keys) for the forward (src, pos) and inverse (dst, ipos) lists."""
+    return [
+        (fwd, key, order, keys)
+        for fwd, key, order, keys in ((True, "src", "pos", srcs), (False, "dst", "ipos", dsts))
+        if keys
+    ]
+
+
+def _update_rows(nt, updates: dict[int, dict]) -> pa.Table:
+    """A transaction's staged attribute updates of one node type: ``id``,
+    the new value of every updated attr, and a ``__set_<attr>`` mask per
+    (node, attr), verified like ``createDataFrame`` would."""
+    upd_set = sorted({a for vals in updates.values() for a in vals})
+    by_name = {f.name: f.dataType for f in nt.struct_type().fields}
+    struct = T.StructType(
+        [T.StructField("id", T.LongType(), False)]
+        + [T.StructField(a, by_name[a], True) for a in upd_set]
+        + [T.StructField(f"__set_{a}", T.BooleanType(), False) for a in upd_set]
+    )
+    rows = [
+        {
+            "id": i,
+            **{a: vals.get(a) for a in upd_set},
+            **{f"__set_{a}": (a in vals) for a in upd_set},
+        }
+        for i, vals in updates.items()
+    ]
+    return arrow_table(rows, struct)
+
+
+def _next_node_table(
+    base: pa.Table, dead: set, upd: pa.Table | None, new: pa.Table | None
+) -> pa.Table:
+    """The next version of a driver-side node table: ``base`` without the
+    ``dead`` ids, each ``upd`` value written where its set-mask is on, and
+    the ``new`` rows appended."""
+    tbl = base
+    if dead:
+        tbl = tbl.filter(pc.invert(pc.is_in(tbl["id"], pa.array(list(dead), pa.int64()))))
+    if upd is not None:
+        row = pc.index_in(upd["id"], value_set=tbl["id"].combine_chunks())  # null: not in base
+        n = tbl.num_rows
+        for i, name in enumerate(tbl.column_names):
+            if f"__set_{name}" not in upd.column_names:
+                continue
+            hit = pc.and_(upd[f"__set_{name}"], pc.is_valid(row))
+            at = pc.filter(row, hit).to_numpy()
+            take = np.arange(n)
+            take[at] = n + np.arange(len(at))
+            col = pa.chunked_array(
+                tbl[name].chunks + pc.filter(upd[name], hit).chunks,
+                type=tbl.schema.field(name).type,
+            )
+            tbl = tbl.set_column(i, tbl.schema.field(name), col.take(pa.array(take)))
+    if new is not None:
+        tbl = pa.concat_tables([tbl, new.cast(tbl.schema)])
+    return tbl
 
 
 class Engine:

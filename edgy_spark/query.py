@@ -16,15 +16,30 @@ into DataFrame plans so Catalyst executes them as distributed joins:
 
 The reference's O(N)-scan ``lookupByName`` (app/Main.hs:132-140) becomes a
 predicate-pushdown columnar scan + unique assertion.
+
+Small graphs run on the driver: a ``NodeSet`` built from a store
+``Snapshot`` whose tables all fit the store's Arrow tier
+(``Snapshot.local``) carries a ``pyarrow.Table`` instead of a plan, and
+``hop``/``union``/``minus_bag``/``anti``/``distinct``/``rehydrate``/
+``filter(**eq)``/``lookup`` keep the same bag semantics in Arrow — no
+Spark job (Pregelix's choice of physical plan by input size, with
+"small" meaning "fits on the driver").  ``.df`` materialises the rows as
+a LocalRelation for everything else, and an operand without a table
+(e.g. after ``filter(condition=Column)``, or a ``hop`` whose result would
+pass the tier's size limit) sends the chain to the DataFrame path.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from edgy_spark.schema import GraphSchema
-from edgy_spark.storage import Snapshot
+from edgy_spark.storage import Snapshot, arrow_column, local_df, local_limit, to_rows
 
 
 class LookupError_(Exception):
@@ -52,18 +67,87 @@ def _with_defaults(df: DataFrame, nt) -> DataFrame:
     )
 
 
+def _local_nodes(snap, schema: GraphSchema, node_type: str) -> pa.Table | None:
+    """The driver-side node table with READ defaults applied (the Arrow
+    twin of ``_with_defaults(snap.nodes(...))``), or None when ``snap`` is
+    not a store snapshot or the table is not on the driver."""
+    if not isinstance(snap, Snapshot):
+        return None
+    tbl = snap.local(f"n_{node_type}")
+    if tbl is None:
+        return None
+    for a in schema.node_type(node_type).attrs:
+        if not a.required and a.default is not None:
+            i = tbl.schema.get_field_index(a.name)
+            default = arrow_column([a.default], a.spark_type())[0]
+            tbl = tbl.set_column(i, tbl.schema.field(i), pc.coalesce(tbl[a.name], default))
+    return tbl
+
+
+def _match(
+    left: pa.ChunkedArray, right: pa.ChunkedArray, max_rows: float = np.inf
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Inner equi-join of two non-null int64 key columns as index pairs:
+    one ``(i, j)`` per ``left[i] == right[j]``, duplicates on both sides
+    kept (bag semantics); None, before building anything, when there would
+    be more than ``max_rows`` pairs."""
+    lk = left.to_numpy()
+    rk = right.to_numpy()
+    order = np.argsort(rk, kind="stable")
+    lo = np.searchsorted(rk[order], lk, "left")
+    cnt = np.searchsorted(rk[order], lk, "right") - lo
+    if cnt.sum() > max_rows:
+        return None
+    li = np.repeat(np.arange(len(lk)), cnt)
+    within = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return li, order[np.repeat(lo, cnt) + within]
+
+
+def _eq_mask(tbl: pa.Table, name: str, value, dt: T.DataType):
+    """``tbl[name] == value`` with Spark's answer, or None when only Spark
+    can say (a value that needs Spark's casts, NaN equality, nested types)."""
+    if value is None:
+        return pa.array(np.zeros(tbl.num_rows, bool))  # = NULL matches nothing
+    if isinstance(value, float) and value != value:
+        return None
+    try:
+        return pc.fill_null(pc.equal(tbl[name], arrow_column([value], dt)[0]), False)
+    except Exception:  # noqa: BLE001 - Spark decides, and raises if it must
+        return None
+
+
 class NodeSet:
-    def __init__(self, snap: Snapshot, schema: GraphSchema, node_type: str, df: DataFrame):
+    def __init__(
+        self,
+        snap: Snapshot,
+        schema: GraphSchema,
+        node_type: str,
+        df: DataFrame | None = None,
+        tbl: pa.Table | None = None,
+    ):
         self.snap = snap
         self.schema = schema
         self.node_type = node_type
-        self.df = df  # bag of node rows (id + attrs)
+        self._df = df  # bag of node rows (id + attrs) as a plan ...
+        self.tbl = tbl  # ... or as a driver-side table
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = local_df(self.snap._store.spark, self.tbl)
+        return self._df
+
+    def _with(self, tbl: pa.Table, node_type: str | None = None) -> "NodeSet":
+        return NodeSet(self.snap, self.schema, node_type or self.node_type, tbl=tbl)
 
     # -- scan / filter / project ------------------------------------------
 
     @classmethod
     def scan(cls, snap: Snapshot, schema: GraphSchema, node_type: str) -> "NodeSet":
         nt = schema.node_type(node_type)  # plan-time validation
+        tbl = _local_nodes(snap, schema, node_type)
+        if tbl is not None:
+            return cls(snap, schema, node_type, tbl=tbl)
         df = _with_defaults(snap.nodes(node_type), nt)
         return cls(snap, schema, node_type, df)
 
@@ -92,6 +176,10 @@ class NodeSet:
         nt = schema.node_type(node_type)
         for name in eq:
             nt.attr(name)  # plan-time validation → UnknownAttributeError
+        if _local_nodes(snap, schema, node_type) is not None:
+            # the index answers exactly what scan+filter does, and on the
+            # driver the filter is the cheaper of the two
+            return cls.scan(snap, schema, node_type).filter(**eq)
         for name, value in eq.items():
             idx = snap.attr_index(node_type, name)
             if idx is None:
@@ -115,6 +203,17 @@ class NodeSet:
 
     def filter(self, condition: Column | None = None, **eq) -> "NodeSet":
         nt = self.schema.node_type(self.node_type)
+        for name in eq:
+            nt.attr(name)  # plan-time validation → UnknownAttributeError
+        if self.tbl is not None and condition is None:
+            tbl = self.tbl
+            for name, value in eq.items():
+                mask = _eq_mask(tbl, name, value, nt.attr(name).spark_type())
+                if mask is None:
+                    break
+                tbl = tbl.filter(mask)
+            else:
+                return self._with(tbl)
         df = self.df
         if condition is not None:
             df = df.filter(condition)
@@ -148,6 +247,30 @@ class NodeSet:
                 f"relation {rel_name!r} starts at {side.source!r}, "
                 f"not {self.node_type!r}"
             )
+        if self.tbl is not None:
+            edges = self.snap.local(f"e_{side.table}")
+            targets = _local_nodes(self.snap, self.schema, side.target)
+            if edges is not None and targets is not None:
+                fr, to, order = (
+                    ("src", "dst", "pos") if side.forward or side.symmetric
+                    else ("dst", "src", "ipos")
+                )
+                # the result is bounded like the tables: a fan-out past the
+                # tier's limit (a hub, a wide seed) is left to Spark, which
+                # can spill (+16: the pos / src_id columns a hop may add)
+                row_bytes = targets.nbytes / max(targets.num_rows, 1) + 16
+                budget = local_limit(self.snap._store.spark) / row_bytes
+                pairs = _match(self.tbl["id"], edges[fr], budget)
+                if pairs is not None:
+                    li, ei = pairs
+                    # target ids are unique: at most one target per edge
+                    k, ti = _match(edges[to].take(ei), targets["id"])
+                    out = targets.take(ti)
+                    if keep_order:
+                        out = out.append_column("pos", edges[order].take(ei[k]))
+                    if with_source:
+                        out = out.append_column("src_id", self.tbl["id"].take(li[k]))
+                    return self._with(out, side.target)
         edges = self.snap.edge_table(side.table)
         if side.forward or side.symmetric:
             e = edges.select(
@@ -176,6 +299,10 @@ class NodeSet:
 
     def union(self, other: "NodeSet") -> "NodeSet":
         self._same_type(other)
+        if self.tbl is not None and other.tbl is not None:
+            return self._with(pa.table({"id": pa.chunked_array(
+                self.tbl["id"].chunks + other.tbl["id"].chunks, pa.int64()
+            )}))
         return NodeSet(
             self.snap, self.schema, self.node_type,
             self.df.select("id").unionAll(other.df.select("id")),
@@ -184,6 +311,16 @@ class NodeSet:
     def minus_bag(self, other: "NodeSet") -> "NodeSet":
         """Bag difference on id — ``Data.List.(\\\\)`` semantics."""
         self._same_type(other)
+        if self.tbl is not None and other.tbl is not None:
+            # EXCEPT ALL: each right occurrence cancels one left occurrence
+            ids, n = np.unique(self.tbl["id"].to_numpy(), return_counts=True)
+            rids, rn = np.unique(other.tbl["id"].to_numpy(), return_counts=True)
+            at = np.searchsorted(rids, ids)
+            hit = at < len(rids)
+            hit[hit] = rids[at[hit]] == ids[hit]
+            n[hit] -= rn[at[hit]]
+            keep = np.repeat(ids, np.maximum(n, 0))
+            return self._with(pa.table({"id": pa.array(keep, pa.int64())}))
         return NodeSet(
             self.snap, self.schema, self.node_type,
             self.df.select("id").exceptAll(other.df.select("id")),
@@ -193,16 +330,33 @@ class NodeSet:
         """Anti-join on id — removes ALL occurrences (document the delta
         from minus_bag; both are exposed per SURVEY §7.4)."""
         self._same_type(other)
+        if self.tbl is not None and other.tbl is not None:
+            gone = pc.is_in(self.tbl["id"], value_set=other.tbl["id"].combine_chunks())
+            return self._with(self.tbl.filter(pc.invert(gone)))
         return NodeSet(
             self.snap, self.schema, self.node_type,
             self.df.join(other.df.select("id"), "id", "left_anti"),
         )
 
     def distinct(self) -> "NodeSet":
+        if self.tbl is not None:
+            try:
+                out = self.tbl.group_by(self.tbl.column_names, use_threads=False).aggregate([])
+                return self._with(out.select(self.tbl.column_names))
+            except pa.ArrowException:  # a column type Arrow cannot group
+                pass
         return NodeSet(self.snap, self.schema, self.node_type, self.df.distinct())
 
     def rehydrate(self) -> "NodeSet":
         """Re-attach attribute columns after id-only algebra."""
+        nodes = _local_nodes(self.snap, self.schema, self.node_type)
+        if self.tbl is not None and nodes is not None:
+            # left join on a unique key: a missing node keeps its id, NULL attrs
+            li, ni = _match(self.tbl["id"], nodes["id"])
+            take = np.full(self.tbl.num_rows, -1)
+            take[li] = ni
+            out = nodes.take(pa.array(take, mask=take < 0))
+            return self._with(out.set_column(0, out.schema.field(0), self.tbl["id"]))
         nodes = _with_defaults(
             self.snap.nodes(self.node_type), self.schema.node_type(self.node_type)
         )
@@ -221,12 +375,32 @@ class NodeSet:
     # -- terminal ----------------------------------------------------------
 
     def ids(self) -> list[int]:
+        if self.tbl is not None:
+            return self.tbl["id"].to_pylist()
         return [r[0] for r in self.df.select("id").collect()]
+
+    def values(self, name: str) -> list:
+        """One column of the bag, with the types ``collect`` returns."""
+        if self.tbl is not None:
+            col = self.tbl.select([name])
+            return [r[0] for r in to_rows(col, _struct(col))]
+        return [r[0] for r in self.df.select(name).collect()]
 
     def unique(self) -> dict:
         """Exactly-one assertion (lookupByName, app/Main.hs:137-140)."""
+        if self.tbl is not None:
+            n = self.tbl.num_rows
+            if n != 1:
+                raise LookupError_(f"expected exactly one {self.node_type}, found {n}")
+            return to_rows(self.tbl, _struct(self.tbl))[0].asDict()
         rows = self.df.limit(2).collect()
         if len(rows) != 1:
             n = self.df.count() if len(rows) > 1 else 0
             raise LookupError_(f"expected exactly one {self.node_type}, found {n or len(rows)}")
         return rows[0].asDict()
+
+
+def _struct(tbl: pa.Table) -> T.StructType:
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(tbl.schema)

@@ -37,6 +37,32 @@ Scale stance: this is the same manifest-pointer-swap design as
 Delta/Iceberg commit protocols — mutation batches are DataFrame-sized
 (never driver loops), table files are parquet and can be partitioned;
 only the tiny manifest is driver-side.
+
+Driver-side Arrow tier.  A table version small enough to hold on the
+driver is also served as a ``pyarrow.Table`` (:meth:`Snapshot.local`), so
+point reads, small commits and traversals over it run no Spark job:
+
+- size rule: the version's stored bytes — the manifest's ``stats`` entry,
+  else the sizes of its files — against :func:`local_limit`, the session's
+  ``spark.sql.autoBroadcastJoinThreshold``: the size up to which Spark
+  itself collects a table to the driver to broadcast it (and the one
+  ``read_store_table`` compares the same stats with).  A bigger table
+  returns None and its readers take the Spark path;
+- cache: one process-wide LRU keyed by the ABSOLUTE relpath, bounded by
+  :data:`LOCAL_CACHE_BYTES`.  A relpath's files never change, so an entry
+  stays valid across commits, ``restore``, clones (absolute entries) and
+  other processes' commits with no invalidation step; ``vacuum`` drops the
+  entries of the relpaths it deletes.  Another process's vacuum is not
+  seen here, so a relpath it deleted may still be served from this cache
+  to a snapshot pinned before it — the same version that snapshot's Spark
+  read would fail on;
+- fill: a miss reads the files with ``pyarrow.parquet`` and casts them to
+  the read schema (recorded, else the footer's); node tables are then
+  projected onto the current NodeType like :func:`_reconcile_to_schema`;
+- write-through: :meth:`GraphStore.commit` accepts a ``pyarrow.Table`` in
+  place of a DataFrame, writes it as a one-partition LocalRelation (one
+  write job, one file) and puts it in the cache under the new relpath, so
+  the read after a commit never pays a fill.
 """
 
 from __future__ import annotations
@@ -46,11 +72,37 @@ import json
 import os
 import shutil
 import tempfile
+import threading
+from collections import OrderedDict
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from edgy_spark.schema import GraphSchema
+
+#: Override of :func:`local_limit`; None (the default) follows the
+#: session's broadcast threshold.  Tests set it to -1 to force the Spark
+#: path.
+LOCAL_MAX_BYTES: int | None = None
+#: Arrow bytes the process-wide table cache holds before evicting the
+#: least recently used versions: a bound on driver memory, not a tuned
+#: value.
+LOCAL_CACHE_BYTES = 512 * 2**20
+
+
+def local_limit(spark: SparkSession) -> int:
+    """Largest stored table version (bytes on disk) the Arrow tier serves,
+    and the budget of a driver-side traversal result: ``LOCAL_MAX_BYTES``
+    when set, else ``spark.sql.autoBroadcastJoinThreshold`` (-1: no tier)."""
+    if LOCAL_MAX_BYTES is not None:
+        return LOCAL_MAX_BYTES
+    from edgy_spark.sources.pysource import _parse_spark_bytes
+
+    try:
+        return _parse_spark_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    except Exception:  # noqa: BLE001 - unreadable conf: no tier
+        return -1
 
 EDGE_STRUCT = T.StructType(
     [
@@ -70,11 +122,48 @@ class Snapshot:
         self.manifest = manifest
         self.version: int = manifest["version"]
 
+    def local(self, key: str) -> pa.Table | None:
+        """Table ``key`` (``n_<type>`` or ``e_<table>``) of this version as
+        a ``pyarrow.Table`` from the driver-side tier (module docstring),
+        or None when it is too big for the driver.  Node tables come back
+        projected onto the current NodeType; a table with no committed
+        version is empty."""
+        kind, name = key[:2], key[2:]
+        if kind == "n_":
+            struct = self._store.schema.node_type(name).struct_type()
+        elif kind == "e_":
+            struct = EDGE_STRUCT
+        else:
+            raise ValueError(f"no driver-side form for table {key!r}")
+        rel = self.manifest["tables"].get(key)
+        if rel is None:
+            return arrow_table([], struct)
+        path = os.path.join(self._store.root, rel)
+        size = (self.manifest.get("stats") or {}).get(key, {}).get("bytes")
+        if size is None:
+            try:
+                size = sum(os.path.getsize(f) for f in _data_files(path))
+            except OSError:  # vacuumed: the Spark read reports it
+                return None
+        if size > local_limit(self._store.spark):
+            return None
+        hit = _LOCAL.get(path)
+        if hit is None:
+            recorded = (self.manifest.get("schemas") or {}).get(rel)
+            hit = _read_local(path, recorded)
+            if hit is None:
+                return None
+            _LOCAL.put(path, hit)
+        stored, tbl = hit
+        if kind == "e_":
+            return tbl
+        return _reconcile_arrow(stored, tbl, self._store.schema.node_type(name))
+
     def nodes(self, node_type: str) -> DataFrame:
         nt = self._store.schema.node_type(node_type)
         rel = self.manifest["tables"].get(f"n_{node_type}")
         if rel is None:
-            return self._store.spark.createDataFrame([], nt.struct_type())
+            return local_df(self._store.spark, arrow_table([], nt.struct_type()))
         tbl = self.manifest.get("bucketed", {}).get(f"n_{node_type}")
         if tbl is not None and self._store.spark.catalog.tableExists(tbl):
             # bucketed-by-id catalog table (bucket_nodes=N): a point read —
@@ -92,7 +181,7 @@ class Snapshot:
     def edge_table(self, table: str) -> DataFrame:
         rel = self.manifest["tables"].get(f"e_{table}")
         if rel is None:
-            return self._store.spark.createDataFrame([], EDGE_STRUCT)
+            return local_df(self._store.spark, arrow_table([], EDGE_STRUCT))
         tbl = self.manifest.get("bucketed", {}).get(f"e_{table}")
         if tbl is not None and self._store.spark.catalog.tableExists(tbl):
             # bucketed-by-src catalog table: a point read filtering on src
@@ -151,6 +240,147 @@ def _read_parquet(
     if recorded is not None:
         reader = reader.schema(T.StructType.fromJson(recorded))
     return reader.parquet(os.path.join(root, rel))
+
+
+class _ArrowCache:
+    """Process-wide LRU of table versions, ``abs path -> (read schema,
+    pyarrow.Table)``.  Locked: ``WriteBehind`` commits (and fills) from its
+    worker thread while other threads read."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[str, tuple[T.StructType, pa.Table]] = OrderedDict()
+        self._bytes = 0
+
+    def get(self, path: str) -> tuple[T.StructType, pa.Table] | None:
+        with self._lock:
+            hit = self._entries.get(path)
+            if hit is not None:
+                self._entries.move_to_end(path)
+            return hit
+
+    def put(self, path: str, entry: tuple[T.StructType, pa.Table]) -> None:
+        with self._lock:
+            old = self._entries.pop(path, None)
+            if old is not None:
+                self._bytes -= old[1].nbytes
+            self._entries[path] = entry
+            self._bytes += entry[1].nbytes
+            while self._bytes > LOCAL_CACHE_BYTES and len(self._entries) > 1:
+                _, (_, evicted) = self._entries.popitem(last=False)
+                self._bytes -= evicted.nbytes
+
+    def discard(self, path: str) -> None:
+        with self._lock:
+            old = self._entries.pop(path, None)
+            if old is not None:
+                self._bytes -= old[1].nbytes
+
+
+_LOCAL = _ArrowCache()
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet files Spark reads for one table-version location."""
+    if os.path.isfile(path):
+        return [path]
+    return [
+        os.path.join(path, n)
+        for n in sorted(os.listdir(path))
+        if not n.startswith(("_", "."))
+    ]
+
+
+def _arrow_schema(struct: T.StructType) -> pa.Schema:
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(struct)
+
+
+def _read_local(path: str, recorded: dict | None):
+    """Fill for the Arrow tier: ``(read schema, table)`` for one table
+    version read with ``pyarrow.parquet``, typed as Spark reads it (the
+    recorded schema, else the first footer's), or None when the files
+    cannot be read that way — the caller then takes the Spark path."""
+    import pyarrow.parquet as pq
+
+    try:
+        files = _data_files(path)
+        if recorded is not None:
+            struct = T.StructType.fromJson(recorded)
+        elif files:
+            struct = _footer_schema(pq.ParquetFile(files[0]))
+        else:
+            return None
+        target = _arrow_schema(struct)
+        parts = [
+            pq.read_table(f, coerce_int96_timestamp_unit="us")
+            .select(struct.names)
+            .cast(target)
+            for f in files
+        ]
+        return struct, pa.concat_tables(parts) if parts else target.empty_table()
+    except Exception:  # noqa: BLE001 - any unreadable shape: use Spark
+        return None
+
+
+def _reconcile_arrow(stored: T.StructType, tbl: pa.Table, nt) -> pa.Table:
+    """:func:`_reconcile_to_schema` for a driver-side table: the same
+    projection onto the current NodeType, decided on the same Spark types."""
+    by_name = {f.name: f.dataType for f in stored.fields}
+    cols = [tbl.column("id")]
+    for a in nt.attrs:
+        if by_name.get(a.name) == a.spark_type():
+            cols.append(tbl.column(a.name))
+        else:
+            cols.append(arrow_column([a.default] * tbl.num_rows, a.spark_type()))
+    return pa.Table.from_arrays(cols, schema=_arrow_schema(_as_nullable(nt.struct_type())))
+
+
+def arrow_column(values: list, dt: T.DataType) -> pa.Array:
+    """Python values (as ``createDataFrame`` accepts them) as one Arrow
+    array of Spark type ``dt``: timestamps go through Spark's own
+    ``toInternal``, so a naive datetime means the same instant on both
+    paths."""
+    if isinstance(dt, T.TimestampType):
+        values = [dt.toInternal(v) if v is not None else None for v in values]
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.array(values, type=to_arrow_type(dt))
+
+
+def arrow_table(rows: list[dict], struct: T.StructType) -> pa.Table:
+    """Driver rows (dicts) as a ``pyarrow.Table`` of ``struct``, checked by
+    the same verifier ``spark.createDataFrame(rows, struct)`` runs, so a
+    value that path rejects raises the same error here."""
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(struct)
+    for r in rows:
+        verify(r)
+    return pa.Table.from_arrays(
+        [arrow_column([r.get(f.name) for r in rows], f.dataType) for f in struct.fields],
+        schema=_arrow_schema(struct),
+    )
+
+
+def local_df(spark: SparkSession, tbl: pa.Table, struct: T.StructType | None = None) -> DataFrame:
+    """A driver-side table as a DataFrame: a LocalRelation, planned as a
+    ``LocalTableScan`` with a size estimate and run with no Python worker."""
+    if struct is None:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        struct = from_arrow_schema(tbl.schema)
+    return spark.createDataFrame(tbl, schema=struct)
+
+
+def to_rows(tbl: pa.Table, struct: T.StructType) -> list:
+    """``Row`` objects with the values ``DataFrame.collect`` returns for the
+    same rows (``bytes`` for binary, naive local ``datetime`` for
+    timestamps)."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    return ArrowTableToRowsConversion.convert(tbl, struct)
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -755,7 +985,7 @@ class GraphStore:
     def commit(
         self,
         base: Snapshot,
-        changed_tables: dict[str, DataFrame],
+        changed_tables: dict[str, DataFrame | pa.Table],
         next_id: int | None = None,
         _maintenance: bool = False,
         cdc: dict[str, DataFrame] | None = None,
@@ -763,6 +993,10 @@ class GraphStore:
         stream_batch: "tuple[str, int] | None" = None,
     ) -> Snapshot:
         """Write changed tables as new versions and publish atomically.
+
+        A table given as a ``pyarrow.Table`` (also in ``cdc``) is written
+        as a LocalRelation and, once published, served from the Arrow tier
+        without a fill (module docstring).
 
         Optimistic concurrency (the reference's STM retry): if CURRENT moved
         past ``base`` since the transaction began, raise ConflictError and
@@ -794,6 +1028,19 @@ class GraphStore:
                 f"snapshot {base.version} is stale (current={self.current_version()})"
             )
         new_version = base.version + 1
+        # driver-side tables (module docstring, write-through): written as a
+        # one-partition LocalRelation — one file, they are driver-sized —
+        # then cached under their new relpath once published
+        arrow_in = {k: t for k, t in changed_tables.items() if isinstance(t, pa.Table)}
+        if arrow_in:
+            changed_tables = {
+                k: local_df(self.spark, arrow_in[k]).coalesce(1) if k in arrow_in else df
+                for k, df in changed_tables.items()
+            }
+        cdc = {
+            k: local_df(self.spark, t).coalesce(1) if isinstance(t, pa.Table) else t
+            for k, t in cdc.items()
+        } if cdc is not None else None
         # CHECK constraints ride the data write itself as observe()
         # metrics — ONE pass, not a separate count job re-executing the
         # staged plan (review r09b).  Violations surface BEFORE the
@@ -1050,6 +1297,10 @@ class GraphStore:
                 self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             raise
         self._publish(new_version)
+        for key, tbl in arrow_in.items():
+            rel = tables[key]
+            struct = T.StructType.fromJson(schemas[rel])
+            _LOCAL.put(os.path.join(self.root, rel), (struct, tbl.cast(_arrow_schema(struct))))
         snap = Snapshot(self, manifest)
         if (
             not _maintenance
@@ -1957,6 +2208,7 @@ class GraphStore:
                 if in_flight and not _abandoned(os.path.join(data_dir, name)):
                     continue
             shutil.rmtree(os.path.join(data_dir, name), ignore_errors=True)
+            _LOCAL.discard(os.path.join(self.root, rel))
             removed.append(rel)
         # a crash DURING a manifest/pointer temp write leaves an unlinked
         # mkstemp file in the root; sweep abandoned ones (same age guard)
@@ -2073,9 +2325,8 @@ class GraphStore:
                 df.withColumn("_commit_version", F.lit(v).cast("long"))
             )
         if not parts:
-            return self.spark.createDataFrame(
-                [], _cdc_struct(self.schema.node_type(key[2:]))
-            )
+            struct = _cdc_struct(self.schema.node_type(key[2:]))
+            return local_df(self.spark, arrow_table([], struct), struct)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

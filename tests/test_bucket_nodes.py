@@ -6,10 +6,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from edgy_spark import storage
 from edgy_spark.demo import big_bang, demo_schema, missing_tools
 from edgy_spark.graph import Engine, Node
 
 N_BUCKETS = 8
+
+
+@pytest.fixture(autouse=True)
+def _spark_path(monkeypatch):
+    """Every table on the Spark path, the one that reads the bucketed
+    catalog tables (the driver-side Arrow tier reads the files)."""
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
 
 
 @pytest.fixture()

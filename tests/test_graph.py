@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from edgy_spark import storage
 from edgy_spark.graph import Engine, Node
 from edgy_spark.query import LookupError_, NodeSet
 from edgy_spark.schema import Cardinality, CardinalityError
@@ -106,16 +107,15 @@ def test_missing_tools_jane(demo_store):
     assert missing_tools(engine, "Jane") == {"Poker Chips"}
 
 
-def test_point_op_job_counts(spark, demo_store):
-    """The per-operation Spark job budget in the graph module docstring: a
-    point read is ONE job (the recorded read schema spares the footer
-    inference, the adjacency is put in list order on the driver), and a
-    set_attribute + add_related commit stays within six."""
-    engine, n = demo_store
+def _point_op_jobs(spark, engine, n, read_jobs: int, commit_jobs: int) -> None:
+    """Point reads run ``read_jobs`` Spark jobs each, and a set_attribute +
+    add_related commit at most ``commit_jobs``."""
     t = engine.read()
-    assert count_jobs(spark, t.get_attribute, n["bob"], "age") == (20, 1)
+    assert count_jobs(spark, t.get_attribute, n["bob"], "age") == (20, read_jobs)
     friends, jobs = count_jobs(spark, t.get_related_list, n["bob"], "friend")
-    assert ([f.id for f in friends], jobs) == ([n["jose"].id, n["jane"].id], 1)
+    assert ([f.id for f in friends], jobs) == ([n["jose"].id, n["jane"].id], read_jobs)
+    ids, jobs = count_jobs(spark, t.all_nodes, "Person")
+    assert jobs == read_jobs and [p.id for p in ids][:3] == [n[k].id for k in ("bob", "jane", "jose")]
 
     p, o = engine.run(
         lambda t: (
@@ -129,10 +129,36 @@ def test_point_op_job_counts(spark, demo_store):
         t.add_related(p, "possession", o)
 
     _, jobs = count_jobs(spark, engine.run, write)
-    assert jobs <= 6, f"set_attribute + add_related commit ran {jobs} jobs"
+    assert jobs <= commit_jobs, f"set_attribute + add_related commit ran {jobs} jobs"
     t = engine.read()
     assert t.get_attribute(p, "age") == 2
     assert t.get_related_list(p, "possession") == [o]
+
+
+def test_point_op_job_counts(spark, demo_store):
+    """The job budget in the graph module docstring, on the store's Arrow
+    tier: a point read runs NO Spark job, and a set_attribute + add_related
+    commit runs one write job per rewritten table (node and edge table)."""
+    _point_op_jobs(spark, *demo_store, read_jobs=0, commit_jobs=2)
+
+
+def test_point_op_job_counts_forced_spark(spark, demo_store, monkeypatch):
+    """The same budget with every table forced onto the Spark path: ONE job
+    per point read (recorded read schema, driver-side sort), at most six
+    for the commit."""
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
+    _point_op_jobs(spark, *demo_store, read_jobs=1, commit_jobs=6)
+
+
+def test_fast_subset_on_forced_spark_path(spark, tmp_path, monkeypatch):
+    """The default-gate store tests above, once more with every table on
+    the Spark path, on a store of their own."""
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
+    store = (engine := Engine(spark, str(tmp_path / "db"), demo_schema()), engine.run(big_bang))
+    test_missing_tools_bob(store)
+    test_missing_tools_jane(store)
+    test_get_related_order_is_prepend(store)
+    test_set_related_then_add_orders_consistently(store)
 
 
 @slow

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from edgy_spark import storage
 from edgy_spark.demo import big_bang, demo_schema
 from edgy_spark.graph import Engine
 from edgy_spark.query import NodeSet
@@ -13,6 +14,13 @@ from edgy_spark.schema import Attr, GraphSchema, NodeType, optional
 from edgy_spark.storage import _index_key
 
 IDX_BUCKETS = 8
+
+
+@pytest.fixture(autouse=True)
+def _spark_path(monkeypatch):
+    """Every table on the Spark path: the driver-side Arrow tier answers
+    ``lookup`` with a scan and never reads the index under test."""
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
 
 
 @pytest.fixture()

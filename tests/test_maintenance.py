@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from edgy_spark import storage
 from edgy_spark.demo import demo_schema
 from edgy_spark.graph import Engine
 from edgy_spark.storage import GraphStore
@@ -89,10 +90,12 @@ def test_compact_folds_fragmented_table_with_identical_reads(spark, tmp_path):
     assert store.compact(target_file_mb=128, min_files=4) is None
 
 
-def test_vacuum_drops_superseded_bucket_catalog_tables(spark, tmp_path):
+def test_vacuum_drops_superseded_bucket_catalog_tables(spark, tmp_path, monkeypatch):
     """ADVICE r05: every bucketed edge commit registers a catalog table and
     old versions were never dropped.  After vacuum, only tables referenced
-    by retained manifests remain registered, and point reads still work."""
+    by retained manifests remain registered, and point reads still work
+    (on the Spark path, which reads the catalog table)."""
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
     root = str(tmp_path / "db")
     engine = Engine(spark, root, demo_schema(), bucket_edges=2)
 

@@ -182,14 +182,16 @@ def test_bucketed_point_read_prunes_to_one_bucket(spark, tmp_path):
     }
 
 
-def test_bucketed_engine_point_ops_correct(spark, tmp_path):
+def test_bucketed_engine_point_ops_correct(spark, tmp_path, monkeypatch):
     """The bucketed layout is a pure physical change: get_related /
     is_related semantics (order, cardinality) are identical to the plain
-    layout."""
+    layout.  On the Spark path, which reads the bucketed catalog table."""
+    from edgy_spark import storage
     from edgy_spark.graph import Engine
     from tests.test_graph import big_bang
     from tests.test_schema import demo_schema
 
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
     engine = Engine(spark, str(tmp_path / "db"), demo_schema(), bucket_edges=8)
     nodes = engine.run(big_bang)
     t = engine.read()
@@ -202,12 +204,12 @@ def test_bucketed_engine_point_ops_correct(spark, tmp_path):
     assert t.get_attribute(t.get_related(nodes["bob"], "spouse"), "name") == "Jane"
 
 
-def test_set_attribute_commit_broadcasts_updates(spark, tmp_path):
-    """A set_attribute commit joins its few update rows to the node table
-    by broadcasting them.  Unhinted, the createDataFrame side has no size
-    estimate and the join plans as a sort-merge join that hash-partitions
-    the WHOLE node table on id."""
+def _set_attribute_commit_plan(spark, tmp_path) -> str:
+    """The formatted plan of the node-table write a set_attribute commit
+    hands to ``GraphStore.commit`` (a driver-side table is planned the way
+    the commit writes it, as a LocalRelation)."""
     from edgy_spark.graph import Engine
+    from edgy_spark.storage import local_df
     from tests.test_graph import big_bang
     from tests.test_schema import demo_schema
 
@@ -222,13 +224,80 @@ def test_set_attribute_commit_broadcasts_updates(spark, tmp_path):
 
     engine.store.commit = capture
     engine.run(lambda t: t.set_attribute(nodes["bob"], "age", 33))
+    assert engine.read().get_attribute(nodes["bob"], "age") == 33
     df = written["n_Person"]
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
+    if not hasattr(df, "_jdf"):
+        df = local_df(spark, df)
+    return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def test_set_attribute_commit_broadcasts_updates(spark, tmp_path, monkeypatch):
+    """On the Spark path, a set_attribute commit joins its few update rows
+    to the node table by broadcasting them.  Unhinted, the join plans as a
+    sort-merge join that hash-partitions the WHOLE node table on id."""
+    from edgy_spark import storage
+
+    monkeypatch.setattr(storage, "LOCAL_MAX_BYTES", -1)
+    plan = _set_attribute_commit_plan(spark, tmp_path)
     assert "BroadcastHashJoin" in plan, plan
     assert "hashpartitioning" not in plan, plan
-    assert engine.read().get_attribute(nodes["bob"], "age") == 33
+    # the update rows are an Arrow LocalRelation, not a Python-list scan
+    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+
+
+def test_set_attribute_commit_writes_local_relation(spark, tmp_path):
+    """On the store's Arrow tier the next node-table version is built on
+    the driver: the write is one LocalTableScan — no file scan, join,
+    exchange or Python-list scan."""
+    plan = _set_attribute_commit_plan(spark, tmp_path)
+    assert "LocalTableScan" in plan, plan
+    for absent in ("Scan ExistingRDD", "FileScan", "Scan parquet", "Exchange", "Join"):
+        assert absent not in plan, plan
+
+
+def test_customer_order_rollup_plan_is_pinned(spark):
+    """The star-view traversal (``NodeSet`` over a ``StarSnapshot``) keeps
+    its DataFrame plan: the optimised plan, with expression ids and the
+    data location masked, equals the recorded one."""
+    import os
+
+    df = QUERIES["graph_customer_order_rollup"].fn(spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#", plan.replace(SF_SMOKE, "<sf>"))
+    golden = os.path.join(
+        os.path.dirname(__file__), "golden", "graph_customer_order_rollup.plan"
+    )
+    with open(golden) as f:
+        assert plan == f.read(), plan
+
+
+def _hash_keys(plan: str) -> list[str]:
+    """The key list of every ``hashpartitioning(keys..., n)`` in ``plan``,
+    matched by parenthesis depth so nested calls (``xxhash64(a, b)``) stay
+    inside one key list; an occurrence that does not parse fails the
+    caller instead of being dropped."""
+    keys = []
+    for m in re.finditer(r"hashpartitioning\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        inner = plan[m.end() : i - 1]
+        head, sep, n = inner.rpartition(", ")
+        if depth == 0 and sep and n.isdigit():
+            keys.append(head.strip())
+    assert len(keys) == plan.count("hashpartitioning("), plan
+    return keys
+
+
+def test_hash_keys_parse_nested_parentheses():
+    plan = (
+        "Exchange hashpartitioning(xxhash64(a#1, b#2), c#3, 200)\n"
+        "Arguments: hashpartitioning(hs#4, 8), ENSURE_REQUIREMENTS"
+    )
+    assert _hash_keys(plan) == ["xxhash64(a#1, b#2), c#3", "hs#4"]
 
 
 def test_decontaminate_broadcasts_eval_shingles(spark):
@@ -255,12 +324,7 @@ def test_duplicate_spans_uses_window_not_join(spark):
     # formatting / AQE shape drift would silently under-count): exactly
     # one hash exchange keyed on hs, one on doc_id, and none on the old
     # per-(doc, hs) pre-aggregation key.
-    import re
-
-    keys = sorted(
-        m.group(1).strip()
-        for m in re.finditer(r"hashpartitioning\(([^)]*?), \d+\)", plan)
-    )
+    keys = sorted(_hash_keys(plan))
     hs_keys = [k for k in keys if k.startswith("hs")]
     doc_keys = [k for k in keys if k.startswith("doc_id")]
     assert len(hs_keys) == 1, plan

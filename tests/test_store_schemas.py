@@ -135,6 +135,10 @@ def test_restore_compact_vacuum_clone_keep_only_live_entries(spark, plain, tmp_p
     assert restored.manifest["schemas"] == store.snapshot(v0).manifest["schemas"]
     assert engine.read().get_attribute(n["bob"], "age") == 20
 
+    # a fragmented table for compact() to fold: engine commits of
+    # driver-side rows write one file per table
+    snap = store.snapshot()
+    store.commit(snap, {"n_Person": snap.nodes("Person").repartition(2)})
     compacted = store.compact(min_files=1)
     assert compacted is not None
     _assert_live(compacted.manifest)
