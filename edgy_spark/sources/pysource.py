@@ -59,9 +59,13 @@ for a loader that must publish a node batch AND its edge batches
 atomically (the reference's single-txn ``bigBang``,
 /root/reference/app/Main.hs:79-116), add ``.option("txn", name)`` to each
 write — data stages without publishing — then
-:func:`commit_edgy_txn(root, name)` links ONE manifest covering every
+:func:`commit_edgy_txn(root, name)` publishes ONE manifest covering every
 staged table, so readers see the batch both-or-neither
 (:func:`abort_edgy_txn` discards a pending txn).
+
+Every write publishes through :func:`edgy_spark.storage.publish`, the
+store's one commit point, arbitrated by hard link: a lost race raises
+:class:`edgy_spark.storage.ConflictError` (a RuntimeError).
 """
 
 from __future__ import annotations
@@ -89,12 +93,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from edgy_spark import storage
+
 
 def _resolve_table_path(root: str, table: str, version: str | None) -> str:
     if version is None:
-        version = _current_version(root)
-    with open(os.path.join(root, f"manifest.v{int(version)}.json")) as f:
-        manifest = json.load(f)
+        version = storage.current_version(root)
+    manifest = storage.read_manifest(root, int(version))
     rel = manifest["tables"].get(table)
     if rel is None:
         raise ValueError(
@@ -432,9 +437,8 @@ class EdgyStreamReader(DataSourceStreamReader):
         self.columns = [f.name for f in schema.fields]
 
     def _current(self) -> dict:
-        version = _current_version(self.root)
-        with open(os.path.join(self.root, f"manifest.v{version}.json")) as f:
-            manifest = json.load(f)
+        version = storage.current_version(self.root)
+        manifest = storage.read_manifest(self.root, version)
         return {"version": version, "next_id": manifest["next_id"]}
 
     def initialOffset(self) -> dict:  # noqa: N802
@@ -442,10 +446,8 @@ class EdgyStreamReader(DataSourceStreamReader):
             # explicit exclusive lower bound: emit changes/ids committed
             # AFTER version V — the manifest at V carries the id cursor,
             # so one offset shape serves both modes
-            path = os.path.join(self.root, f"manifest.v{self.start_version}.json")
             try:
-                with open(path) as f:
-                    manifest = json.load(f)
+                manifest = storage.read_manifest(self.root, self.start_version)
             except FileNotFoundError:
                 raise ValueError(
                     f"startVersion={self.start_version} has no manifest "
@@ -470,10 +472,7 @@ class EdgyStreamReader(DataSourceStreamReader):
 
         def _load(v: int) -> dict:
             if v not in cache:
-                with open(
-                    os.path.join(self.root, f"manifest.v{v}.json")
-                ) as f:
-                    cache[v] = json.load(f)
+                cache[v] = storage.read_manifest(self.root, v)
             return cache[v]
 
         # evolution null-fill uses the CURRENT manifest's declared defaults
@@ -482,7 +481,7 @@ class EdgyStreamReader(DataSourceStreamReader):
         # evolution, whose end version predates the new attribute)
         try:
             cur_defaults = (
-                _load(_current_version(self.root)).get("defaults") or {}
+                _load(storage.current_version(self.root)).get("defaults") or {}
             ).get(self.table, {})
         except (FileNotFoundError, ValueError):
             cur_defaults = {}
@@ -795,24 +794,6 @@ def stats_from_footers(dir_path: str) -> dict:
     return {"rows": rows, "bytes": size}
 
 
-def _ecosystem_stats(
-    root: str, manifest: dict, tables: dict, changed: list[str]
-) -> dict:
-    """Per-table stats for a manifest published by an ECOSYSTEM writer:
-    untouched tables carry their stats forward (same files), changed tables
-    get rows/bytes recomputed from their promoted footers.  NDV resets to
-    {} — the Arrow writer path has no aggregation engine; the next
-    GraphStore commit of that table restores the sketches."""
-    stats = {
-        k: v for k, v in (manifest.get("stats") or {}).items() if k in tables
-    }
-    for key in changed:
-        s = stats_from_footers(os.path.join(root, tables[key]))
-        s["ndv"] = {}
-        stats[key] = s
-    return stats
-
-
 def _id_range_from_zones(zones: dict, has_id: bool) -> tuple[int, int, bool]:
     """(min_id, max_id, has_ids) for the id-cursor check, read off the zone
     stats already folded over the batches (ids are int64 in every store
@@ -858,7 +839,7 @@ class EdgyWriter(DataSourceArrowWriter):
         self.overwrite = overwrite
         self.txn = txn
         self.has_id = "id" in [f.name for f in schema.fields]
-        self.base_version = _current_version(root)
+        self.base_version = storage.current_version(root)
         self.staging = os.path.join("data", f".staging-{uuid.uuid4().hex}")
         os.makedirs(os.path.join(root, self.staging), exist_ok=True)
 
@@ -910,15 +891,15 @@ class EdgyWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):
-        current = _current_version(self.root)
+        current = storage.current_version(self.root)
         if current != self.base_version:
             self.abort(messages)
-            raise RuntimeError(
-                f"edgy write conflict: store moved v{self.base_version} -> "
-                f"v{current} during the write; re-run the job"
+            raise storage.ConflictError(
+                f"edgy write conflict: a concurrent commit published "
+                f"v{current} after this write began on v{self.base_version}; "
+                "re-run the job"
             )
-        with open(os.path.join(self.root, f"manifest.v{current}.json")) as f:
-            manifest = json.load(f)
+        manifest = storage.read_manifest(self.root, current)
         schema_err = self._validate_schema(manifest, messages)
         if schema_err:
             self.abort(messages)
@@ -929,7 +910,7 @@ class EdgyWriter(DataSourceArrowWriter):
             raise ValueError(id_err)
         if self.txn is not None:
             # multi-table atomic load: record this table's staged state and
-            # return WITHOUT publishing — commit_edgy_txn links ONE manifest
+            # return WITHOUT publishing — commit_edgy_txn publishes ONE manifest
             # covering every table in the txn (bigBang atomicity at bulk
             # scale: a reader at any version sees a node batch and its edge
             # batches both-or-neither).  The validations above are a
@@ -948,13 +929,9 @@ class EdgyWriter(DataSourceArrowWriter):
             self.abort(messages)
             raise ValueError(f"edgy bulk write rejected ({self.table}): {chk}")
         loaded_max = max((m.max_id for m in messages if m), default=-1)
-        new_version = current + 1
-        tables = dict(manifest["tables"])
-        bucketed = dict(manifest.get("bucketed", {}))
-        indexes = dict(manifest.get("indexes", {}))
-        tables[self.table] = _promote_staging(
+        rel = _promote_staging(
             self.root, manifest, self.table, self.staging,
-            self.overwrite, new_version,
+            self.overwrite, current + 1,
             [m.filename for m in messages if m and m.filename],
             zones={
                 m.filename: m.zones
@@ -962,30 +939,10 @@ class EdgyWriter(DataSourceArrowWriter):
                 if m and m.filename and getattr(m, "zones", None)
             },
         )
-        bucketed.pop(self.table, None)  # a bulk load replaces bucketed layout
-        _drop_stale_indexes(tables, bucketed, indexes, self.table)
-        new_manifest = {
-            "version": new_version,
-            "next_id": max(manifest["next_id"], loaded_max + 1),
-            "tables": tables,
-            "bucketed": bucketed,
-            # secondary indexes for OTHER node types stay valid (their
-            # tables are untouched); the loaded table's own were dropped
-            # above — GraphStore.rebuild_indexes restores them
-            "indexes": indexes,
-            "stream_batches": manifest.get("stream_batches", {}),
-            # bulk-writer commits carry the engine-declared defaults
-            # forward unchanged (the writer has no GraphSchema); "cdc" is
-            # deliberately absent = changes NOT captured for this commit
-            "defaults": manifest.get("defaults", {}),
-            "checks": manifest.get("checks", {}),
-            "stats": _ecosystem_stats(
-                self.root, manifest, tables, [self.table]
-            ),
-            "schemas": live_schemas(manifest.get("schemas"), tables),
-        }
-        _link_manifest(self.root, new_manifest, [tables[self.table]])
-        _publish_current(self.root, new_version)
+        _publish_promoted(
+            self.root, manifest, {self.table: rel},
+            next_id=max(manifest["next_id"], loaded_max + 1),
+        )
 
     def abort(self, messages):
         import shutil as _shutil
@@ -1015,7 +972,7 @@ class EdgyStreamWriter(DataSourceStreamWriter):
 
     Concurrency: a lost manifest race REBASES like a retried Engine
     transaction — the vouched batch files are hard-linked (not moved)
-    into the per-batch staging, so losing the link keeps the originals
+    into the per-batch staging, so losing the race keeps the originals
     and the commit retries against the new current version.  Validation
     (schema-vs-footers, id-cursor) reruns per attempt against the base it
     will publish on.
@@ -1081,9 +1038,8 @@ class EdgyStreamWriter(DataSourceStreamWriter):
         msgs = [m for m in messages if m]
         staged = [m.filename for m in msgs if m.filename]
         for _attempt in range(self.MAX_COMMIT_ATTEMPTS):
-            current = _current_version(self.root)
-            with open(os.path.join(self.root, f"manifest.v{current}.json")) as f:
-                manifest = json.load(f)
+            current = storage.current_version(self.root)
+            manifest = storage.read_manifest(self.root, current)
             committed = manifest.get("stream_batches", {}).get(self.stream_id, -1)
             if batchId <= committed:
                 self._cleanup(staged)  # replayed batch: already published
@@ -1112,90 +1068,39 @@ class EdgyStreamWriter(DataSourceStreamWriter):
                     os.path.join(self.root, self.staging, n),
                     os.path.join(self.root, batch_staging, n),
                 )
-            new_version = current + 1
-            tables = dict(manifest["tables"])
-            bucketed = dict(manifest.get("bucketed", {}))
-            indexes = dict(manifest.get("indexes", {}))
             rel = _promote_staging(
                 self.root, manifest, self.table, batch_staging,
-                False, new_version, staged,
+                False, current + 1, staged,
                 zones={
                     m.filename: m.zones
                     for m in msgs
                     if m.filename and getattr(m, "zones", None)
                 },
             )
-            tables[self.table] = rel
-            bucketed.pop(self.table, None)
-            _drop_stale_indexes(tables, bucketed, indexes, self.table)
-            batches = dict(manifest.get("stream_batches", {}))
-            batches[self.stream_id] = batchId
             loaded_max = max(
                 (m.max_id for m in msgs if getattr(m, "has_ids", False)), default=-1
             )
-            new_manifest = {
-                "version": new_version,
-                "next_id": max(manifest["next_id"], loaded_max + 1),
-                "tables": tables,
-                "bucketed": bucketed,
-                "indexes": indexes,
-                "stream_batches": batches,
-                "defaults": manifest.get("defaults", {}),
-                "checks": manifest.get("checks", {}),
-                "stats": _ecosystem_stats(
-                    self.root, manifest, tables, [self.table]
-                ),
-                "schemas": live_schemas(manifest.get("schemas"), tables),
-            }
             try:
-                _link_manifest(self.root, new_manifest, [rel])
-            except RuntimeError:
+                _publish_promoted(
+                    self.root, manifest, {self.table: rel},
+                    next_id=max(manifest["next_id"], loaded_max + 1),
+                    stream_batches={
+                        **manifest.get("stream_batches", {}),
+                        self.stream_id: batchId,
+                    },
+                )
+            except storage.ConflictError:
                 continue  # lost the race: rebase on the new current version
-            _publish_current(self.root, new_version)
             self._cleanup(staged)
             return
-        raise RuntimeError(
+        raise storage.ConflictError(
             f"edgy stream sink: batch {batchId} lost the manifest race "
-            f"{self.MAX_COMMIT_ATTEMPTS} times; is another writer looping?"
+            f"{self.MAX_COMMIT_ATTEMPTS} times (a concurrent commit published "
+            "each version first); is another writer looping?"
         )
 
     def abort(self, messages, batchId):  # noqa: N803 - Spark API name
         self._cleanup([m.filename for m in messages if m and m.filename])
-
-
-def _current_version(root: str) -> int:
-    """Newest committed version — CURRENT rolled forward past newer
-    complete manifests (manifest creation is the commit point; the pointer
-    is a cache that a crashed committer may have left stale — same contract
-    as GraphStore.current_version)."""
-    with open(os.path.join(root, "CURRENT")) as f:
-        v = int(f.read().strip())
-    while manifest_is_complete(os.path.join(root, f"manifest.v{v + 1}.json")):
-        v += 1
-    return v
-
-
-def stamp_committed_at(root: str, manifest: dict) -> None:
-    """Stamp the wall-clock commit time (epoch seconds, float) into the
-    manifest as ``committed_at`` — the Delta DESCRIBE-HISTORY timestamp
-    and the key ``timestampAsOf`` reads resolve against.  Nudged strictly
-    past the predecessor version's stamp (Delta's own +1 ms adjustment),
-    so version order and timestamp order agree even when the committer's
-    clock stepped backward; a predecessor without a stamp (pre-r12 store)
-    or an unreadable one leaves the raw clock value."""
-    import time
-
-    now = time.time()
-    v = manifest.get("version", 0)
-    if v > 0:
-        try:
-            with open(os.path.join(root, f"manifest.v{v - 1}.json")) as f:
-                prev = json.load(f).get("committed_at")
-            if isinstance(prev, (int, float)) and now <= prev:
-                now = prev + 0.001
-        except (OSError, json.JSONDecodeError, ValueError):
-            pass
-    manifest["committed_at"] = now
 
 
 def resolve_timestamp(
@@ -1241,10 +1146,9 @@ def resolve_timestamp(
     else:
         target = float(ts)
     oldest_seen = None
-    for v in range(_current_version(root), -1, -1):
+    for v in range(storage.current_version(root), -1, -1):
         try:
-            with open(os.path.join(root, f"manifest.v{v}.json")) as f:
-                stamp = json.load(f).get("committed_at")
+            stamp = storage.read_manifest(root, v).get("committed_at")
         except FileNotFoundError:
             break  # vacuumed: nothing older is retained
         except (OSError, json.JSONDecodeError, ValueError) as exc:
@@ -1275,32 +1179,6 @@ def resolve_timestamp(
         )
         + "; older versions are beyond retention"
     )
-
-
-def manifest_is_complete(path: str) -> bool:
-    """True iff ``path`` holds a COMPLETE manifest.  An empty or
-    unparseable file is a ConditionalPutArbiter putter's in-flight or
-    crashed claim, not a commit — the ONE completeness rule shared by the
-    engine's and this DataSource's roll-forward (review r10c: two
-    divergent copies would let the reader and the engine disagree about
-    the current version)."""
-    try:
-        if os.path.getsize(path) == 0:
-            return False
-        with open(path) as f:
-            json.load(f)
-        return True
-    except (OSError, json.JSONDecodeError, UnicodeDecodeError):
-        return False
-
-
-def _publish_current(root: str, version: int) -> None:
-    import tempfile
-
-    fd, tmp = tempfile.mkstemp(dir=root)
-    with os.fdopen(fd, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(root, "CURRENT"))
 
 
 def _validate_staged_schema(
@@ -1420,15 +1298,6 @@ def _enforce_manifest_checks(
     return None
 
 
-def live_schemas(schemas: dict | None, tables: dict) -> dict:
-    """The recorded read schemas (``edgy_spark.storage`` module docstring)
-    of the relpaths ``tables`` still points at — what every manifest writer
-    carries forward.  A table a writer replaced gets a new relpath: with no
-    entry it reads with footer inference until an engine commit rewrites it."""
-    live = set(tables.values())
-    return {rel: s for rel, s in (schemas or {}).items() if rel in live}
-
-
 def _promote_staging(
     root: str, manifest: dict, key: str, staging: str,
     overwrite: bool, new_version: int, staged: list[str],
@@ -1494,34 +1363,40 @@ def _promote_staging(
     return relpath
 
 
-def _link_manifest(root: str, new_manifest: dict, promoted_rel: list[str]) -> None:
-    """Atomic link of a fully-written temp file = compare-and-swap AND no
-    reader can see partial JSON: two committers from the same base both
-    pass the version pre-check, but the filesystem lets only one link
-    manifest.v{N+1} — the loser cleans up its promoted data and raises
-    instead of silently overwriting the winner's committed manifest.
-    Manifest creation is the COMMIT POINT; CURRENT is a pointer cache
-    readers roll forward past (a crash between the two is harmless)."""
-    import shutil as _shutil
-    import tempfile
-
-    new_version = new_manifest["version"]
-    stamp_committed_at(root, new_manifest)
-    fd, tmp = tempfile.mkstemp(dir=root)
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(new_manifest, f)
-        try:
-            os.link(tmp, os.path.join(root, f"manifest.v{new_version}.json"))
-        except FileExistsError:
-            for rel in promoted_rel:
-                _shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
-            raise RuntimeError(
-                f"edgy write conflict: a concurrent commit published "
-                f"v{new_version} first; re-run the job"
-            ) from None
-    finally:
-        os.unlink(tmp)
+def _publish_promoted(
+    root: str, base: dict, promoted: dict[str, str], **fields
+) -> None:
+    """Publish the promoted table versions (``key -> relpath``) on
+    ``base`` through :func:`edgy_spark.storage.publish`, arbitrated by
+    hard link.  A bulk write replaces the table's bucketed layout and
+    drops a written node table's secondary indexes; a written table's
+    stats are its footers' rows/bytes with no NDV (the Arrow writers run
+    no aggregation; the next engine commit of the table records it).  A
+    lost race removes the promoted directories and raises
+    :class:`edgy_spark.storage.ConflictError`."""
+    # a bulk write bypasses the engine's index maintenance, so a written
+    # node table's indexes are stale: drop them (readers fall back to
+    # scan+filter) rather than let a lookup return pre-load ids
+    stale = tuple(f"x_{k[2:]}__" for k in promoted if k.startswith("n_"))
+    tables = {
+        k: r for k, r in {**base["tables"], **promoted}.items()
+        if not k.startswith(stale)
+    }
+    bucketed = {
+        k: t for k, t in base.get("bucketed", {}).items()
+        if k not in promoted and not k.startswith(stale)
+    }
+    indexes = {
+        k: m for k, m in base.get("indexes", {}).items() if not k.startswith(stale)
+    }
+    stats = dict(base.get("stats") or {})
+    for key, rel in promoted.items():
+        stats[key] = {**stats_from_footers(os.path.join(root, rel)), "ndv": {}}
+    storage.publish(
+        root, base, storage.HardLinkArbiter(), list(promoted.values()),
+        tables=tables, bucketed=bucketed, indexes=indexes, stats=stats,
+        **fields,
+    )
 
 
 def _txn_dir(root: str, txn: str) -> str:
@@ -1563,26 +1438,10 @@ def _record_txn_table(
     os.replace(tmp, rec)
 
 
-def _drop_stale_indexes(
-    tables: dict, bucketed: dict, indexes: dict, written_key: str
-) -> None:
-    """A bulk load bypasses the engine's index maintenance, so any secondary
-    index of the written NODE table is stale the moment the manifest links —
-    drop its entries (readers then fall back to scan+filter, which is always
-    correct) rather than let an indexed lookup return pre-load ids."""
-    if not written_key.startswith("n_"):
-        return
-    pfx = f"x_{written_key[2:]}__"
-    for k in [k for k in tables if k.startswith(pfx)]:
-        tables.pop(k)
-        bucketed.pop(k, None)
-        indexes.pop(k, None)
-
-
 def commit_edgy_txn(root: str, txn: str) -> int:
     """Finalize a multi-table atomic bulk load: publish every table staged
     under ``df.write.format("edgy").option("txn", name)`` in ONE manifest
-    link, so a reader at any version sees all of the txn's tables
+    publish, so a reader at any version sees all of the txn's tables
     both-or-neither — the bulk-scale analogue of the reference's
     single-transaction ``bigBang`` (/root/reference/app/Main.hs:79-116),
     which the Engine's own multi-table staged commit already provides for
@@ -1592,7 +1451,7 @@ def commit_edgy_txn(root: str, txn: str) -> int:
     nothing; this re-validates everything against the manifest CURRENT at
     finalize time (the authoritative base — txn writes rebase like a
     retried Engine transaction), promotes every staging directory, and
-    links one manifest.  Returns the new version.  On validation failure
+    publishes one manifest.  Returns the new version.  On validation failure
     nothing is published and the staged data remains for retry or
     :func:`abort_edgy_txn`; on a lost manifest race the promoted data is
     removed and the job must re-run (same contract as a single-table
@@ -1616,9 +1475,8 @@ def commit_edgy_txn(root: str, txn: str) -> int:
             self.min_id = m["min_id"]
             self.has_ids = m.get("has_ids", False)
 
-    current = _current_version(root)
-    with open(os.path.join(root, f"manifest.v{current}.json")) as f:
-        manifest = json.load(f)
+    current = storage.current_version(root)
+    manifest = storage.read_manifest(root, current)
     # authoritative validation pass over EVERY table before any promotion
     for p in pend:
         msgs = [_Msg(m) for m in p["messages"]]
@@ -1663,56 +1521,33 @@ def commit_edgy_txn(root: str, txn: str) -> int:
                 "above the store's cursor."
             )
         cursor = hi + 1
-    new_version = current + 1
-    tables = dict(manifest["tables"])
-    bucketed = dict(manifest.get("bucketed", {}))
-    indexes = dict(manifest.get("indexes", {}))
     next_id = manifest["next_id"]
-    promoted: list[str] = []
+    promoted: dict[str, str] = {}
     for p in pend:
-        rel = _promote_staging(
+        promoted[p["table"]] = _promote_staging(
             root, manifest, p["table"], p["staging"], p["overwrite"],
-            new_version, [m["filename"] for m in p["messages"]],
+            current + 1, [m["filename"] for m in p["messages"]],
             zones={
                 m["filename"]: m["zones"]
                 for m in p["messages"]
                 if m.get("zones")
             },
         )
-        tables[p["table"]] = rel
-        bucketed.pop(p["table"], None)
-        _drop_stale_indexes(tables, bucketed, indexes, p["table"])
-        promoted.append(rel)
         loaded_max = max((m["max_id"] for m in p["messages"]), default=-1)
         next_id = max(next_id, loaded_max + 1)
-    new_manifest = {
-        "version": new_version,
-        "next_id": next_id,
-        "tables": tables,
-        "bucketed": bucketed,
-        "indexes": indexes,
-        "stream_batches": manifest.get("stream_batches", {}),
-        "defaults": manifest.get("defaults", {}),
-        "checks": manifest.get("checks", {}),
-        "stats": _ecosystem_stats(
-            root, manifest, tables, [p["table"] for p in pend]
-        ),
-        "schemas": live_schemas(manifest.get("schemas"), tables),
-    }
     try:
-        _link_manifest(root, new_manifest, promoted)
-    except RuntimeError:
+        _publish_promoted(root, manifest, promoted, next_id=next_id)
+    except storage.ConflictError:
         # lost the manifest race AFTER consuming the staging dirs: the
-        # promoted data was removed by _link_manifest, so the pending
-        # records now point at nothing — clear them too, or re-running the
-        # load job dies on "already staged" and a retried finalize on
-        # missing staging paths (review r08).  The job re-runs from scratch,
-        # same contract as a lost single-table race.
+        # promoted data was removed by publish, so the pending records now
+        # point at nothing — clear them too, or re-running the load job
+        # dies on "already staged" and a retried finalize on missing
+        # staging paths.  The job re-runs from scratch, same contract as a
+        # lost single-table race.
         _shutil.rmtree(d, ignore_errors=True)
         raise
-    _publish_current(root, new_version)
     _shutil.rmtree(d, ignore_errors=True)
-    return new_version
+    return current + 1
 
 
 def abort_edgy_txn(root: str, txn: str) -> None:
@@ -1787,7 +1622,7 @@ def read_store_table(
             raise ValueError("version and timestamp are mutually exclusive")
         v = resolve_timestamp(root, timestamp)
     else:
-        v = version if version is not None else _current_version(root)
+        v = version if version is not None else storage.current_version(root)
     df = (
         spark.read.format("edgy")
         .option("root", root)
@@ -1796,8 +1631,7 @@ def read_store_table(
         .load()
     )
     try:
-        with open(os.path.join(root, f"manifest.v{v}.json")) as f:
-            stats = (json.load(f).get("stats") or {}).get(table)
+        stats = (storage.read_manifest(root, v).get("stats") or {}).get(table)
     except (FileNotFoundError, json.JSONDecodeError, ValueError):
         stats = None
     if stats and isinstance(stats.get("bytes"), int):

@@ -24,14 +24,47 @@ every entry against the files' footers.
 A transaction pins the latest version (snapshot pinning: all reads inside
 one transaction see one version — parity with app/Main.hs:175-179's
 read-your-own-scan atomicity), stages mutations, writes only the
-*changed* tables as new parquet versions, and commits by exclusive-create
-``os.link`` of ``manifest.v{N+1}`` — the link IS the commit point and
-arbitrates racing committers (see ``_write_manifest``).  CURRENT is
-written after, by ``os.replace``, and is only a roll-forward pointer
-cache: readers probe past it for newer manifests, so a crash between link
-and pointer swap neither loses the commit nor wedges the store.  Readers
-never see a partial commit; unchanged tables are shared across versions
-(manifest points at the old files).
+*changed* tables as new parquet versions, and commits through
+:func:`publish`, the store's ONE commit point for every writer: a
+:class:`CommitArbiter` exclusively creates ``manifest.v{N+1}`` — that
+create IS the commit and arbitrates racing committers (the loser removes
+its written data and raises :class:`ConflictError`).  CURRENT is swapped
+after, by ``os.replace``, and is only a roll-forward pointer cache
+(:func:`current_version` probes past it for newer manifests), so a crash
+between create and pointer swap neither loses the commit nor wedges the
+store.  Readers never see a partial commit; unchanged tables are shared
+across versions (manifest points at the old files).  Only the v0
+manifests (``GraphStore`` bootstrap, :meth:`GraphStore.clone`) are
+created outside :func:`publish`.
+
+Every published manifest has the same fields: each writer sets the ones
+below, the rest of :data:`CARRIED_FIELDS` carry forward from its base,
+``cdc`` is null unless set, and ``committed_at`` is always stamped.
+
+==================  =========================================  ==============
+writer              sets                                       carries
+==================  =========================================  ==============
+GraphStore.commit   next_id, tables, bucketed, indexes,        —
+                    stats (written tables: footer rows/bytes
+                    and NDV), schemas, defaults, checks,
+                    stream_batches, cdc (when captured)
+GraphStore.restore  the restored version's tables, bucketed,   stream_batches
+                    indexes, stats and schemas; next_id (max
+                    of then and now); defaults, checks
+format("edgy")      next_id (past the loaded ids), tables,     defaults,
+writers             bucketed and indexes (the written tables'  checks,
+                    entries dropped), stats (written tables:   schemas
+                    footer rows/bytes, ``ndv: {}``); the
+                    stream sink also stream_batches
+==================  =========================================  ==============
+
+The ``format("edgy")`` writers (``sources/pysource.py``) commit inside
+Spark's DataSource protocol with no ``GraphStore`` in reach, so they
+always arbitrate by hard link (:class:`HardLinkArbiter`), whatever
+arbiter the store's engine uses.  On a local filesystem that still
+excludes an engine commit racing them under :class:`ConditionalPutArbiter`
+(both create the manifest exclusively); on an object store they would
+need the store's arbiter, which no manifest records.
 
 Scale stance: this is the same manifest-pointer-swap design as
 Delta/Iceberg commit protocols — mutation batches are DataFrame-sized
@@ -74,6 +107,7 @@ import shutil
 import tempfile
 import threading
 from collections import OrderedDict
+from collections.abc import Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -596,6 +630,123 @@ class ConditionalPutArbiter(CommitArbiter):
             os.close(fd)  # releases the flock
 
 
+# -- the commit protocol (module docstring) ---------------------------------
+
+#: Manifest fields a commit carries from its base unless the writer sets
+#: them; every published manifest has these plus version, cdc, committed_at.
+CARRIED_FIELDS = (
+    "next_id", "tables", "bucketed", "indexes", "stream_batches",
+    "defaults", "checks", "stats", "schemas",
+)
+
+
+def _manifest_path(root: str, version: int) -> str:
+    return os.path.join(root, f"manifest.v{version}.json")
+
+
+def read_manifest(root: str, version: int) -> dict:
+    """Manifest ``version`` of the store at ``root`` (FileNotFoundError
+    once vacuumed)."""
+    with open(_manifest_path(root, version)) as f:
+        return json.load(f)
+
+
+def manifest_is_complete(path: str) -> bool:
+    """True iff ``path`` holds a COMPLETE manifest.  An empty or
+    unparseable file is a ConditionalPutArbiter putter's in-flight or
+    crashed claim, not a commit."""
+    try:
+        if os.path.getsize(path) == 0:
+            return False
+        with open(path) as f:
+            json.load(f)
+        return True
+    except (OSError, json.JSONDecodeError, UnicodeDecodeError):
+        return False
+
+
+def current_version(root: str) -> int:
+    """Newest committed version of the store at ``root``: CURRENT rolled
+    forward past newer complete manifests, which a committer that crashed
+    between :func:`publish`'s manifest create and pointer swap leaves."""
+    with open(os.path.join(root, "CURRENT")) as f:
+        v = int(f.read().strip())
+    while manifest_is_complete(_manifest_path(root, v + 1)):
+        v += 1
+    return v
+
+
+def stamp_committed_at(root: str, manifest: dict) -> None:
+    """Stamp the wall-clock commit time (epoch seconds, float) into the
+    manifest as ``committed_at`` — the Delta DESCRIBE-HISTORY timestamp
+    and the key ``timestampAsOf`` reads resolve against.  Nudged strictly
+    past the predecessor version's stamp (Delta's own +1 ms adjustment),
+    so version order and timestamp order agree even when the committer's
+    clock stepped backward; a predecessor without a stamp (pre-r12 store)
+    or an unreadable one leaves the raw clock value."""
+    import time
+
+    now = time.time()
+    v = manifest.get("version", 0)
+    if v > 0:
+        try:
+            prev = read_manifest(root, v - 1).get("committed_at")
+            if isinstance(prev, (int, float)) and now <= prev:
+                now = prev + 0.001
+        except (OSError, json.JSONDecodeError, ValueError):
+            pass
+    manifest["committed_at"] = now
+
+
+def _swap_current(root: str, version: int) -> None:
+    fd, tmp = tempfile.mkstemp(dir=root)
+    with os.fdopen(fd, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, os.path.join(root, "CURRENT"))  # atomic pointer swap
+
+
+def publish(
+    root: str,
+    base: dict,
+    arbiter: CommitArbiter,
+    written: Sequence[str] = (),
+    **fields,
+) -> dict:
+    """Publish version ``base["version"] + 1`` of the store at ``root``:
+    the one commit point of every writer (module docstring).  The new
+    manifest is ``base`` with the ``fields`` it is given replaced (names
+    from :data:`CARRIED_FIELDS`, plus ``cdc``), ``stats`` and ``schemas``
+    pruned to the live tables, and ``committed_at`` stamped.  ``arbiter``
+    creates it exclusively; a lost race removes the ``written`` relpaths
+    and raises :class:`ConflictError`, a win swaps CURRENT.  Returns the
+    published manifest."""
+    unknown = set(fields) - set(CARRIED_FIELDS) - {"cdc"}
+    if unknown:
+        raise TypeError(f"not a manifest field: {sorted(unknown)}")
+    version = base["version"] + 1
+    manifest = {"version": version}
+    for k in CARRIED_FIELDS:
+        manifest[k] = fields[k] if k in fields else base.get(k, {})
+    manifest["cdc"] = fields.get("cdc")
+    # stats are keyed by table, read schemas by relpath (module docstring)
+    tables = manifest["tables"]
+    live = set(tables.values())
+    manifest["stats"] = {k: s for k, s in manifest["stats"].items() if k in tables}
+    manifest["schemas"] = {r: s for r, s in manifest["schemas"].items() if r in live}
+    stamp_committed_at(root, manifest)
+    if not arbiter.put_if_absent(_manifest_path(root, version), json.dumps(manifest)):
+        # drop this attempt's data so a retry doesn't rely on vacuum's
+        # 24 h orphan sweep
+        for rel in written:
+            shutil.rmtree(os.path.join(root, rel), ignore_errors=True)
+        raise ConflictError(
+            f"concurrent commit published version {version} first; re-run "
+            "on the new current version"
+        )
+    _swap_current(root, version)
+    return manifest
+
+
 #: Spark simpleString -> DuckDB type, for the empty-frame declaration-time
 #: validation of CHECK conditions (the scalar types node attributes can be)
 _DUCK_TYPES = {
@@ -775,16 +926,18 @@ class GraphStore:
         self.retain_versions = retain_versions
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         if not os.path.exists(self._current_path):
-            won = self._write_manifest(
-                {
-                    "version": 0,
-                    "next_id": 1,
-                    "tables": {},
-                    "checks": dict(self.check_constraints),
-                }
-            )
-            if won:
-                self._publish(0)
+            # v0 is created by put_if_absent directly: two sessions opening
+            # the same root race it, and since v0 embeds the declared
+            # ``checks`` the loser reconciles its declaration below
+            v0 = {
+                "version": 0,
+                "next_id": 1,
+                "tables": {},
+                "checks": dict(self.check_constraints),
+            }
+            stamp_committed_at(self.root, v0)
+            if self.commit_arbiter.put_if_absent(self._manifest_path(0), json.dumps(v0)):
+                _swap_current(self.root, 0)
             else:
                 # bootstrap race LOST: v0 embeds the winner's declaration,
                 # which may differ.  A session that declared checks
@@ -796,8 +949,6 @@ class GraphStore:
                 # (review r10).  Under ConditionalPutArbiter the winner's
                 # v0 may be a still-empty claim for a moment — wait for it
                 # to become COMPLETE before reading (review r10c).
-                from edgy_spark.sources.pysource import manifest_is_complete
-
                 import time as _time
 
                 # wait at least the arbiter's crash-reclaim window (a
@@ -829,7 +980,7 @@ class GraphStore:
                 # r11 ADVICE).  CURRENT stays a cache either way:
                 # current_version rolls forward past any stale value.
                 if not os.path.exists(self._current_path):
-                    self._publish(0)
+                    _swap_current(self.root, 0)
                 if self._checks_declared:
                     self._sync_declared_checks()
                 else:
@@ -861,48 +1012,7 @@ class GraphStore:
         return os.path.join(self.root, "CURRENT")
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.root, f"manifest.v{version}.json")
-
-    def _write_manifest(self, manifest: dict) -> bool:
-        """Atomically create the manifest — the COMMIT POINT of the store.
-
-        The exclusive create is delegated to the :class:`CommitArbiter`
-        (hard-link on POSIX, conditional PUT on object stores): it both
-        (a) publishes complete content atomically (no reader can ever see
-        partial JSON) and (b) arbitrates racing committers — two commits
-        from the same base both pass the staleness check, but only one
-        creates ``manifest.v{N+1}``; the loser gets ConflictError and
-        retries instead of silently overwriting the winner's committed
-        transaction.
-
-        CURRENT is published AFTER this and is only a pointer cache:
-        ``current_version`` rolls forward past it, so a crash between the
-        create and the pointer swap neither loses the commit nor wedges the
-        store (the next reader/committer adopts the newer manifest).  (The
-        version-0 bootstrap in ``__init__`` is the only caller that may
-        find a pre-existing file: two sessions opening the same store root
-        race the initial manifest — since v0 embeds the declared ``checks``,
-        the loser returns False so the bootstrap can reconcile its own
-        declaration against the winner's instead of assuming identical
-        bytes.)  Returns True when this call created the manifest."""
-        from edgy_spark.sources.pysource import stamp_committed_at
-
-        path = self._manifest_path(manifest["version"])
-        stamp_committed_at(self.root, manifest)
-        if not self.commit_arbiter.put_if_absent(path, json.dumps(manifest)):
-            if manifest["version"] == 0:
-                return False  # bootstrap race: other session won v0
-            raise ConflictError(
-                f"concurrent commit already published version "
-                f"{manifest['version']}"
-            )
-        return True
-
-    def _publish(self, version: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._current_path)  # atomic pointer swap
+        return _manifest_path(self.root, version)
 
     def _sync_declared_checks(self) -> None:
         """Persist this session's explicit ``check_constraints`` declaration
@@ -955,30 +1065,12 @@ class GraphStore:
         return f"edgy_{h}_{key}_v{version}{suffix}"
 
     def current_version(self) -> int:
-        """Newest committed version: the CURRENT pointer, rolled FORWARD
-        past any newer complete manifests.  Manifest creation is the commit
-        point (see ``_write_manifest``); a committer that crashed — or has
-        not yet gotten — between the manifest link and the pointer swap
-        leaves CURRENT stale, and without the roll-forward every later
-        commit would collide with the orphan manifest forever."""
-        with open(self._current_path) as f:
-            v = int(f.read().strip())
-
-        # roll-forward must not adopt a ConditionalPutArbiter putter's
-        # in-flight/crashed claim (the hard-link path never exposes one;
-        # the parse runs only when a newer manifest actually exists —
-        # review r10b: non-empty-but-truncated torsos wedged the adopt).
-        # ONE completeness rule, shared with the DataSource reader.
-        from edgy_spark.sources.pysource import manifest_is_complete
-
-        while manifest_is_complete(self._manifest_path(v + 1)):
-            v += 1
-        return v
+        """Newest committed version (:func:`current_version`)."""
+        return current_version(self.root)
 
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = self.current_version() if version is None else version
-        with open(self._manifest_path(v)) as f:
-            return Snapshot(self, json.load(f))
+        return Snapshot(self, read_manifest(self.root, v))
 
     # -- commit ------------------------------------------------------------
 
@@ -1100,9 +1192,9 @@ class GraphStore:
         # per-attempt token: racing committers from the same base write to
         # DISTINCT data locations (and catalog table names), so the loser's
         # overwrite-mode job can never clobber the winner's committed files.
-        # The manifest's exclusive create below is the single arbitration
-        # point; the loser's orphaned data is cleaned up here (best-effort)
-        # or by vacuum's age-guarded sweep.
+        # The manifest's exclusive create (publish) is the single
+        # arbitration point; the loser's orphaned data is cleaned up there
+        # (best-effort) or by vacuum's age-guarded sweep.
         import uuid as _uuid
 
         token = _uuid.uuid4().hex[:8]
@@ -1187,8 +1279,6 @@ class GraphStore:
         # fall back (Snapshot.attr_index).
         from pyspark.sql import functions as F  # local: keep module light
 
-        from edgy_spark.sources.pysource import live_schemas
-
         indexes = dict(base.manifest.get("indexes", {}))
         reindex_types = {k[2:] for k in changed_tables if k.startswith("n_")}
         if _reindex:
@@ -1246,57 +1336,35 @@ class GraphStore:
             df.write.mode("overwrite").parquet(os.path.join(self.root, relpath))
             cdc_entries[key] = relpath
             written_paths.append(relpath)
-        manifest = {
-            "version": new_version,
-            "next_id": next_id if next_id is not None else base.manifest["next_id"],
-            "tables": tables,
-            "bucketed": bucketed,
-            "indexes": indexes,
-            # the streaming sink's exactly-once replay guard must survive
-            # interleaved commits from ANY committer (pysource.EdgyStreamWriter)
-            # — ``stream_batch=(stream_id, batch_id)`` stamps THIS commit as
-            # that micro-batch's effect (Delta's idempotent-writes txn
-            # appId/version), advancing the carried-forward cursor map
-            "stream_batches": {
-                **base.manifest.get("stream_batches", {}),
-                **(dict([stream_batch]) if stream_batch else {}),
-            },
-            # per-commit (not carried forward): changes base.version -> new.
-            # Tri-state — dict = captured (maintenance = captured-empty:
-            # compaction is no logical change), null = NOT captured.
-            "cdc": (
-                cdc_entries if (cdc is not None or _maintenance) else None
-            ),
-            # declared optional-attr defaults, so SCHEMA-FREE consumers
-            # (the upsert stream source) can apply the same mempty-analogue
-            # the engine reads — keeps a replica built from the stream
-            # byte-equal to engine reads across schema evolution.  Bytes
-            # defaults are base64-tagged; anything not representable is
-            # omitted (the stream then null-fills, documented).
-            "defaults": self._defaults_map(),
-            # the CHECK declaration is table metadata: persisted so any
-            # writer (bulk Arrow loads, the streaming sink, txn finalize)
-            # can enforce it from the manifest alone
-            "checks": dict(self.check_constraints),
-            # per-table {rows, bytes, ndv:{col: estimate}}: plan-time
-            # cardinalities so readers can broadcast dimension-sized store
-            # tables WITHOUT waiting for an AQE runtime replan (the
-            # Delta/Iceberg table-stats model) — see read_store_table
-            "stats": {k: v for k, v in table_stats.items() if k in tables},
-            # per-relpath read schemas (module docstring)
-            "schemas": live_schemas(schemas, tables),
-        }
         try:
-            self._write_manifest(manifest)
+            manifest = publish(
+                self.root,
+                base.manifest,
+                self.commit_arbiter,
+                written_paths,
+                next_id=next_id if next_id is not None else base.manifest["next_id"],
+                tables=tables,
+                bucketed=bucketed,
+                indexes=indexes,
+                # tri-state (docstring): a maintenance compaction is
+                # captured-empty, it is no logical change
+                cdc=cdc_entries if (cdc is not None or _maintenance) else None,
+                defaults=self._defaults_map(),
+                checks=dict(self.check_constraints),
+                stats=table_stats,
+                schemas=schemas,
+                # stream_batch=(stream_id, batch_id) stamps THIS commit as
+                # that micro-batch's effect (Delta's idempotent-writes txn
+                # appId/version) for the streaming sink's replay guard
+                stream_batches={
+                    **base.manifest.get("stream_batches", {}),
+                    **(dict([stream_batch]) if stream_batch else {}),
+                },
+            )
         except ConflictError:
-            # a concurrent commit won the version: drop this attempt's data
-            # so the retry doesn't rely on vacuum's 24 h orphan sweep
-            for rel in written_paths:
-                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
             for tbl in written_tbls:
                 self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             raise
-        self._publish(new_version)
         for key, tbl in arrow_in.items():
             rel = tables[key]
             struct = T.StructType.fromJson(schemas[rel])
@@ -1642,26 +1710,22 @@ class GraphStore:
             for k, t in old.manifest.get("bucketed", {}).items()
             if self.spark.catalog.tableExists(t)
         }
-        manifest = {
-            "version": base.version + 1,
-            "next_id": max(
-                base.manifest["next_id"], old.manifest["next_id"]
-            ),
-            "tables": dict(old.manifest["tables"]),
-            "bucketed": bucketed,
-            "indexes": dict(old.manifest.get("indexes", {})),
-            "stream_batches": base.manifest.get("stream_batches", {}),
-            "cdc": None,
+        manifest = publish(
+            self.root,
+            base.manifest,
+            self.commit_arbiter,
+            next_id=max(base.manifest["next_id"], old.manifest["next_id"]),
+            tables=dict(old.manifest["tables"]),
+            bucketed=bucketed,
+            indexes=dict(old.manifest.get("indexes", {})),
             # from the LIVE schema, never the restored manifest (see
             # _defaults_map)
-            "defaults": self._defaults_map(),
-            "checks": dict(self.check_constraints),
+            defaults=self._defaults_map(),
+            checks=dict(self.check_constraints),
             # stats describe the FILES, which are the restored version's
-            "stats": dict(old.manifest.get("stats", {})),
-            "schemas": dict(old.manifest.get("schemas", {})),
-        }
-        self._write_manifest(manifest)
-        self._publish(manifest["version"])
+            stats=dict(old.manifest.get("stats", {})),
+            schemas=dict(old.manifest.get("schemas", {})),
+        )
         return Snapshot(self, manifest)
 
     def clone(self, new_root: str) -> "GraphStore":
@@ -1703,10 +1767,7 @@ class GraphStore:
         snap = self.snapshot()
 
         def _open_clone() -> "GraphStore":
-            fd, tmp = tempfile.mkstemp(dir=new_root)
-            with os.fdopen(fd, "w") as f:
-                f.write("0")
-            os.replace(tmp, os.path.join(new_root, "CURRENT"))
+            _swap_current(new_root, 0)
             return GraphStore(
                 self.spark, new_root, self.schema,
                 bucket_edges=self.bucket_edges,
@@ -1787,8 +1848,6 @@ class GraphStore:
         # hold.  If the put below loses, the pin is redundant-but-identical
         # (same content-addressed file) or ages out via the dead-clone rule.
         self._register_clone(new_root, manifest["tables"].values(), snap.version)
-        from edgy_spark.sources.pysource import stamp_committed_at
-
         stamp_committed_at(new_root, manifest)
         if not self.commit_arbiter.put_if_absent(v0_path, json.dumps(manifest)):
             # accurate recovery guidance per arbiter: only ConditionalPut
@@ -1867,8 +1926,7 @@ class GraphStore:
         records: list[dict] = []
         for v in range(horizon, current + 1):
             try:
-                with open(self._manifest_path(v)) as f:
-                    m = json.load(f)
+                m = read_manifest(self.root, v)
             except FileNotFoundError:
                 # vacuumed inside the horizon: the NEXT version must not
                 # be diffed against a non-adjacent predecessor (a RESTORE
@@ -2040,10 +2098,8 @@ class GraphStore:
         horizon = self._retention_horizon(current)
         checked = []
         for v in range(horizon, current + 1):
-            mpath = self._manifest_path(v)
             try:
-                with open(mpath) as f:
-                    m = json.load(f)
+                m = read_manifest(self.root, v)
             except FileNotFoundError:
                 continue  # vacuumed inside the horizon: vacuum's business
             except (json.JSONDecodeError, OSError) as exc:
@@ -2143,16 +2199,15 @@ class GraphStore:
         # manifest N+k survives).  A racing commit may immediately advance
         # past this write — harmless, CURRENT is a hint readers roll
         # forward from, never backward-authoritative.
-        self._publish(current)
+        _swap_current(self.root, current)
         horizon = self._retention_horizon(current, retain)
         referenced_rel: set[str] = set()
         referenced_tbl: set[str] = set()
         for v in range(horizon, current + 1):
-            path = self._manifest_path(v)
-            if not os.path.exists(path):
+            try:
+                m = read_manifest(self.root, v)
+            except FileNotFoundError:
                 continue
-            with open(path) as f:
-                m = json.load(f)
             referenced_rel.update(m["tables"].values())
             referenced_rel.update((m.get("cdc") or {}).values())
             referenced_tbl.update(m.get("bucketed", {}).values())
@@ -2288,8 +2343,7 @@ class GraphStore:
         parts: list[DataFrame] = []
         for v in range(from_version + 1, to_version + 1):
             try:
-                with open(self._manifest_path(v)) as f:
-                    m = json.load(f)
+                m = read_manifest(self.root, v)
             except FileNotFoundError:
                 if strict:
                     raise ValueError(
@@ -2363,8 +2417,10 @@ class CheckViolationError(Exception):
     """A commit tried to publish rows violating a declared CHECK constraint."""
 
 
-class ConflictError(Exception):
-    """Concurrent commit beat this transaction — re-run it (STM retry analogue)."""
+class ConflictError(RuntimeError):
+    """Concurrent commit beat this transaction — re-run it (STM retry
+    analogue).  A RuntimeError, the error the ``format("edgy")`` writers
+    document for a lost race."""
 
 
 def snapshot_diff(old: Snapshot, new: Snapshot, node_type: str) -> DataFrame:

@@ -319,10 +319,10 @@ def test_crashed_commit_rolls_forward_instead_of_wedging(spark, tmp_path, monkey
     engine.run(lambda t: t.new_node("Person", name="Before", age=1))
     v_ok = engine.store.current_version()
 
-    def crash(_version):
+    def crash(_root, _version):
         raise OSError("simulated crash before CURRENT publish")
 
-    monkeypatch.setattr(engine.store, "_publish", crash)
+    monkeypatch.setattr(storage, "_swap_current", crash)
     with pytest.raises(OSError, match="simulated crash"):
         engine.run(lambda t: t.new_node("Person", name="Crashed", age=2))
     monkeypatch.undo()
@@ -382,10 +382,10 @@ def test_vacuum_repairs_stale_current_before_dropping_manifests(spark, tmp_path,
     for i in range(4):
         engine.run(lambda t, i=i: t.new_node("Person", name=f"P{i}", age=i))
 
-    def crash(_version):
+    def crash(_root, _version):
         raise OSError("simulated crash before CURRENT publish")
 
-    monkeypatch.setattr(engine.store, "_publish", crash)
+    monkeypatch.setattr(storage, "_swap_current", crash)
     with pytest.raises(OSError):
         engine.run(lambda t: t.new_node("Person", name="Crashed", age=9))
     monkeypatch.undo()
@@ -493,10 +493,10 @@ def test_conditional_put_arbiter_crash_rolls_forward(spark, tmp_path, monkeypatc
     engine.run(lambda t: t.new_node("Person", name="Before", age=1))
     v_ok = engine.store.current_version()
 
-    def crash(_version):
+    def crash(_root, _version):
         raise OSError("simulated crash before CURRENT publish")
 
-    monkeypatch.setattr(engine.store, "_publish", crash)
+    monkeypatch.setattr(storage, "_swap_current", crash)
     with pytest.raises(OSError, match="simulated crash"):
         engine.run(lambda t: t.new_node("Person", name="Crashed", age=2))
     monkeypatch.undo()

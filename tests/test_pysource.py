@@ -347,6 +347,7 @@ def test_edgy_writer_manifest_cas_arbitrates_racing_commits(spark, tmp_path, mon
     import pytest
 
     import edgy_spark.sources.pysource as ps
+    from edgy_spark import storage
 
     engine, _ = _store(spark, tmp_path)
     root = engine.store.root
@@ -367,7 +368,7 @@ def test_edgy_writer_manifest_cas_arbitrates_racing_commits(spark, tmp_path, mon
     w1, m1 = writer_with_rows("Winner", 900)
     w2, m2 = writer_with_rows("Loser", 901)
     # both pass the pre-check: pin the version both writers see
-    monkeypatch.setattr(ps, "_current_version", lambda _root: base)
+    monkeypatch.setattr(storage, "current_version", lambda _root: base)
     w1.commit(m1)
     with pytest.raises(RuntimeError, match="concurrent commit published"):
         w2.commit(m2)
