@@ -11,8 +11,8 @@ independent implementations (the stdlib ``wave`` module and the JVM's
 ``javax.sound.sampled``) in tests/test_wav.py.
 
 Like png.py the module is pure stdlib, so operators ship it to Python
-workers BY VALUE via ``cloudpickle.register_pickle_by_value`` — decode
-works even when the workers have no ``edgy_spark`` on sys.path.
+workers BY VALUE (``_codec`` in operators/multimodal.py) — decode works
+even when the workers have no ``edgy_spark`` on sys.path.
 
 Reference parity note: the reference engine stores media-like values as
 opaque Binary attributes (/root/reference/src/Edgy/Schema.hs:148-155) and

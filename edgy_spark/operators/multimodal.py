@@ -11,17 +11,36 @@ partitioning):
 
 - ``decode_features`` — deterministic fake pixel math (md5-derived, hence
   reproducible in the SQL oracle) for the registered fixture queries;
-- ``decode_features_png`` (r08) — REAL pixel decode that executes HERE:
-  a pure-stdlib PNG codec (functions/png.py, zlib + scanline unfilters
-  from the public spec), cross-validated against the JVM's independent
-  javax.imageio decoder;
+- ``decode_features_png`` (r08) and its siblings — REAL decode that
+  executes HERE through the pure-stdlib codecs in ``edgy_spark/functions``
+  (png, jpeg, gif, webp/vp8, wav, flac, mp3, written from the public
+  specs), cross-validated against the JVM's independent decoders where
+  the JDK reads the format;
 - ``decode_features_real`` — the PIL-backed full-format path, exercised by
   ``pytest.importorskip`` tests (tests/test_multimodal_real.py) wherever
   the library exists.
 
+The real decode runs in two shapes:
+
+- **the codec lane** — every ``decode_features_*`` / ``decode_frames_*``
+  operator is a docstring, a codec lookup and a ``rows_of(data)``
+  generator handed to :func:`_codec_lane`, the one batch loop that owns
+  the ``on_error`` contract (NULL payloads, the codecs' failure surface,
+  the ``decode_error`` column), the ``(n_bytes, content_md5)`` digest and
+  the in-stage ``synth`` fusion of the synthetic codec gates;
+- **the id→row gate** — :func:`_fused_media_gate`, for the bench codec
+  gates: a doc_id goes in, one fixed-width row of longs comes out, media
+  bytes are synthesized and decoded inside ``row_of`` and never form a
+  column.
+
+Codecs reach the Python workers BY VALUE through :func:`_codec` (one
+table of which codec modules import which), so decode works when the
+driver runs from outside the repo and the workers have no ``edgy_spark``
+on sys.path (pinned by tests/test_codec_lanes.py).
+
 There is no media fixture in the driver's testdata, so binary payloads are
-synthesized from ``documents.text`` (utf-8 bytes) — stable and realistic
-enough to exercise the byte path end to end.
+synthesized from ``documents.text`` (utf-8 bytes) or from ``doc_id`` —
+stable and realistic enough to exercise the byte path end to end.
 
 Scale: mapInPandas streams Arrow batches; media bytes never pass through
 the driver, and a 100 TB corpus decodes at executor parallelism.  Partition
@@ -59,25 +78,117 @@ def _check_on_error(on_error: str) -> bool:
     return on_error == "null"
 
 
-def _maybe_fuse_synth(decode, synth):
-    """Compose an in-stage ``synth`` batch transformer with a decode batch
-    function — identity when ``synth`` is None.
+#: Every codec module another codec module imports (png → gif's animation
+#: helpers; webp → gif's helpers and the VP8 decoder).  Shipping a codec by
+#: value must ship these too: a module left out is pickled BY REFERENCE,
+#: and workers without ``edgy_spark`` on sys.path fail with
+#: ModuleNotFoundError.  tests/test_codec_lanes.py checks the table
+#: against the modules' actual imports.
+_CODEC_IMPORTS = {"png": ("gif",), "webp": ("gif", "vp8")}
 
-    This is the r15 generalization of the r14 ``_fused_media_gate`` fusion
-    (guide §4) to the multi-row-per-doc decode lanes: a synthetic codec
-    gate passes its synth mapInPandas body as ``synth=`` and the decode
-    operator runs it inside its OWN Python stage, so the synthesized media
-    bytes never cross the JVM<->Arrow boundary (as two chained mapInPandas
-    stages every payload was serialized out of the synth stage and back
-    into the decode stage).  With a real media corpus ``synth`` stays None
-    and the decode operators are byte-for-byte unchanged."""
-    if synth is None:
-        return decode
 
-    def fused(batches):
-        return decode(synth(batches))
+def _codec(name: str):
+    """Return the codec module ``edgy_spark.functions.<name>``, registered
+    with cloudpickle BY VALUE together with every codec module it imports
+    (:data:`_CODEC_IMPORTS`).  A closure that captures the module's
+    functions then carries their code to the Python workers, so decode
+    works even when the driver runs from outside the repo and the workers
+    have no ``edgy_spark`` on sys.path.  Driver-side only."""
+    import importlib
 
-    return fused
+    from pyspark import cloudpickle
+
+    for dep in (name, *_CODEC_IMPORTS.get(name, ())):
+        cloudpickle.register_pickle_by_value(
+            importlib.import_module(f"edgy_spark.functions.{dep}")
+        )
+    return importlib.import_module(f"edgy_spark.functions.{name}")
+
+
+_IMAGE_STATS = "width long, height long, mean_luma long"
+_FRAME_STATS = "frame_idx long, width long, height long, mean_luma long"
+_LOUDNESS_STATS = (
+    "sample_rate long, channels long, n_frames long, "
+    "duration_us long, peak_amplitude long, mean_square long"
+)
+
+
+def _codec_lane(
+    media_df: DataFrame,
+    rows_of,
+    columns: str,
+    on_error: str,
+    synth=None,
+    digest: bool = False,
+) -> DataFrame:
+    """The one Arrow batch loop behind every ``decode_features_*`` /
+    ``decode_frames_*`` operator.
+
+    ``rows_of(data: bytes)`` decodes one payload and yields its stats
+    tuples — one per asset for the image and audio lanes, one per frame
+    or sample for the frame lanes; ``columns`` is their DDL.  The output
+    is ``doc_id``, then ``n_bytes, content_md5`` of the payload when
+    ``digest``, then ``columns``, then ``decode_error`` in
+    ``on_error='null'`` mode (:func:`_check_on_error`).  A NULL payload,
+    or a ValueError/NotImplementedError raised while ``rows_of`` runs,
+    fails the task in ``'raise'`` mode; in ``'null'`` mode it becomes ONE
+    row of NULL stats carrying the message, after any rows the asset
+    yielded before it — a mid-stream corruption (an interrupted crawl
+    download) keeps the frames decoded before it.
+
+    ``synth`` is a mapInPandas body that turns the input's ``doc_id``
+    batches into ``(doc_id, media)`` batches, for the synthetic codec
+    gates.  It runs INSIDE the decode's own Python stage (one
+    MapInPandas, guide §4): the synthesized bytes never cross the
+    JVM<->Arrow boundary, where two chained mapInPandas stages serialized
+    every payload out of the synth stage and back into the decode stage.
+    With a real media corpus ``synth`` stays None.
+
+    ``decode`` below is what cloudpickle ships to the workers: it must
+    name no module-level ``edgy_spark`` object (those pickle by reference
+    and do not import there), only its closure cells.
+    """
+    tolerant = _check_on_error(on_error)
+    schema = "doc_id long"
+    if digest:
+        schema += ", n_bytes long, content_md5 string"
+    schema += f", {columns}"
+    if tolerant:
+        schema += ", decode_error string"
+    names = [c.split()[0] for c in schema.split(",")]
+    n_stats = len(columns.split(","))
+    ok = (None,) if tolerant else ()
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import hashlib
+
+        for pdf in batches if synth is None else synth(batches):
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
+                if payload is None:
+                    if not tolerant:
+                        raise ValueError("NULL media payload")
+                    rows.append(
+                        (doc_id,) + (None,) * (len(names) - 2)
+                        + ("NULL media payload",)
+                    )
+                    continue
+                data = bytes(payload)
+                head = (
+                    (doc_id, len(data), hashlib.md5(data).hexdigest())
+                    if digest
+                    else (doc_id,)
+                )
+                try:
+                    for stats in rows_of(data):
+                        rows.append(head + stats + ok)
+                except (ValueError, NotImplementedError) as e:
+                    if not tolerant:
+                        raise
+                    rows.append(head + (None,) * n_stats + (str(e),))
+            yield pd.DataFrame(rows, columns=names)
+
+    return media_df.mapInPandas(decode, schema)
 
 
 def with_media_column(docs: DataFrame) -> DataFrame:
@@ -186,93 +297,29 @@ def decode_features_png(media_df: DataFrame, on_error: str = "raise", synth=None
     closure, nothing in the plan.  Cross-validated against the JVM's
     independent javax.imageio decoder in tests/test_multimodal_real.py.
 
-    The codec travels to the Python workers BY VALUE
-    (``cloudpickle.register_pickle_by_value`` on functions/png.py — pure
-    stdlib, so its pickled globals are just ``struct``/``zlib`` module
+    The codec travels to the Python workers BY VALUE (:func:`_codec`
+    registers functions/png.py and the gif.py helpers it imports — pure
+    stdlib, so their pickled globals are just ``struct``/``zlib`` module
     refs): unlike the in-closure import it replaces, the decode works even
     when the driver runs from outside the repo and the workers have no
     ``edgy_spark`` on sys.path (the same constraint the decode_features
-    NOTE documents; pinned by tests/test_multimodal_real.py's
+    NOTE documents; pinned by tests/test_codec_lanes.py's
     clean-sys.path subprocess test).
     """
-    from pyspark import cloudpickle
+    decode_png = _codec("png").decode_png
+    rec601 = _codec("gif").rec601_mean
 
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import png as _png
+    def rows_of(data: bytes):
+        import numpy as np
 
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_png = _png.decode_png
-    tolerant = _check_on_error(on_error)
+        w, h, ch, px = decode_png(data)
+        if ch >= 3:  # Rec.601 integer luma over RGB(A)
+            yield (w, h, rec601(px, ch, w, h))
+        else:  # grey(+alpha): the grey plane IS luma
+            grey = np.frombuffer(px, dtype=np.uint8)[::ch]
+            yield (w, h, int(grey.sum(dtype=np.int64)) // (w * h))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_png(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                # Rec.601 integer luma — numpy int64 arithmetic, exact
-                # (same sums as the python-int loop, severalfold faster
-                # post-decode; review r13 finding #3)
-                import numpy as np
-
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                if ch >= 3:  # Rec.601 integer luma over RGB(A)
-                    rgb = arr.reshape(-1, ch)[:, :3]
-                    luma = int(
-                        (rgb * np.array([299, 587, 114])).sum()
-                    ) // (1000 * w * h)
-                elif ch == 2:  # grey+alpha (r09 codec): luma = grey plane
-                    luma = int(arr[0::2].sum()) // (w * h)
-                else:  # greyscale: samples ARE luma
-                    luma = int(arr.sum()) // (w * h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _codec_lane(media_df, rows_of, _IMAGE_STATS, on_error, synth, digest=True)
 
 
 def decode_features_jpeg(media_df: DataFrame, on_error: str = "raise", synth=None) -> DataFrame:
@@ -290,73 +337,18 @@ def decode_features_jpeg(media_df: DataFrame, on_error: str = "raise", synth=Non
     :func:`multimodal_jpeg_block_stats` routes it through this decoder
     under the driver's value-hash gate.
     """
-    from pyspark import cloudpickle
+    jpeg = _codec("jpeg")
+    decode_jpeg = jpeg.decode_jpeg
+    mean_luma = jpeg.mean_luma
 
-    from edgy_spark.functions import jpeg as _jpeg
+    def rows_of(data: bytes):
+        w, h, ch, px = decode_jpeg(data)
+        # mean_luma raises on a non-(1|3)-component buffer — reachable via
+        # 8-bit MULTI-component SOF3, whose components are not color
+        # channels (route to the lossless lane instead, review r14)
+        yield (w, h, mean_luma(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_jpeg)
-    decode_jpeg = _jpeg.decode_jpeg
-    mean_luma = _jpeg.mean_luma
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_jpeg(data)
-                    # mean_luma raises on a non-(1|3)-component buffer —
-                    # reachable via 8-bit MULTI-component SOF3, whose
-                    # components are not color channels (route to the
-                    # lossless lane instead, review r14); numpy int64
-                    # luma — exact, severalfold faster (review r13)
-                    luma = mean_luma(px, ch, w, h)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _codec_lane(media_df, rows_of, _IMAGE_STATS, on_error, synth, digest=True)
 
 
 @register(
@@ -613,15 +605,7 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears and decode_features_png runs over the binary column
     directly, with the multi-file scan's native parallelism.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import png as _png
-
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_png = _png.encode_png
+    encode_png = _codec("png").encode_png
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -637,9 +621,6 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_png(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -689,14 +670,10 @@ def multimodal_jpeg_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan's.  With a real media corpus the synth step disappears and
     decode_features_jpeg runs over the binary column directly.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import jpeg as _jpeg
-
-    cloudpickle.register_pickle_by_value(_jpeg)
-    encode_flat = _jpeg.encode_jpeg_flat
-    decode_jpeg = _jpeg.decode_jpeg
-    mean_luma = _jpeg.mean_luma
+    jpeg = _codec("jpeg")
+    encode_flat = jpeg.encode_jpeg_flat
+    decode_jpeg = jpeg.decode_jpeg
+    mean_luma = jpeg.mean_luma
 
     # one fused Python stage (synth + decode, _fused_media_gate): the
     # decoder entry point and luma statistic (jpeg.mean_luma) are the
@@ -755,14 +732,10 @@ def multimodal_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataF
     Scale: identical to the baseline twin — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import jpeg as _jpeg
-
-    cloudpickle.register_pickle_by_value(_jpeg)
-    encode_prog = _jpeg.encode_jpeg_flat_progressive
-    decode_jpeg = _jpeg.decode_jpeg
-    mean_luma = _jpeg.mean_luma
+    jpeg = _codec("jpeg")
+    encode_prog = jpeg.encode_jpeg_flat_progressive
+    decode_jpeg = jpeg.decode_jpeg
+    mean_luma = jpeg.mean_luma
 
     # one fused Python stage — same decoder entry point and shared luma
     # statistic as decode_features_jpeg (see multimodal_jpeg_block_stats)
@@ -817,12 +790,7 @@ def multimodal_jpeg_multiscan_stats(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import jpeg as _jpeg
-
-    cloudpickle.register_pickle_by_value(_jpeg)
-    encode_ms = _jpeg.encode_jpeg_flat_multiscan
+    encode_ms = _codec("jpeg").encode_jpeg_flat_multiscan
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -835,9 +803,6 @@ def multimodal_jpeg_multiscan_stats(spark: SparkSession, sf_dir: str) -> DataFra
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_jpeg(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -887,14 +852,10 @@ def multimodal_jpeg_cmyk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import jpeg as _jpeg
-
-    cloudpickle.register_pickle_by_value(_jpeg)
-    encode_cmyk = _jpeg.encode_jpeg_flat_cmyk
-    decode_jpeg = _jpeg.decode_jpeg
-    mean_luma = _jpeg.mean_luma
+    jpeg = _codec("jpeg")
+    encode_cmyk = jpeg.encode_jpeg_flat_cmyk
+    decode_jpeg = jpeg.decode_jpeg
+    mean_luma = jpeg.mean_luma
 
     # one fused Python stage — same decoder entry point and shared luma
     # statistic as decode_features_jpeg (see multimodal_jpeg_block_stats)
@@ -949,12 +910,7 @@ def multimodal_jpeg_rgb_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import jpeg as _jpeg
-
-    cloudpickle.register_pickle_by_value(_jpeg)
-    encode_ms = _jpeg.encode_jpeg_flat_multiscan
+    encode_ms = _codec("jpeg").encode_jpeg_flat_multiscan
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct as _struct
@@ -1014,9 +970,6 @@ def multimodal_jpeg_rgb_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_jpeg(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -1073,15 +1026,7 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import png as _png
-
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_png = _png.encode_png
+    encode_png = _codec("png").encode_png
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1118,9 +1063,6 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_png(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -1148,79 +1090,23 @@ def decode_features_wav(media_df: DataFrame, on_error: str = "raise", synth=None
     Scale: samples never leave the executors — each payload reduces to six
     small ints in the exchanged rows; decode parallelism is the scan's.
     """
-    from pyspark import cloudpickle
+    decode_wav = _codec("wav").decode_wav
 
-    from edgy_spark.functions import wav as _wav
+    def rows_of(data: bytes):
+        rate, ch, samples = decode_wav(data)
+        n_frames = len(samples) // ch
+        yield (
+            rate,
+            ch,
+            n_frames,
+            n_frames * 1_000_000 // rate,
+            # an empty data chunk is VALID WAV (review r08): a zero-length
+            # track scores silence, not a crash
+            max((abs(s) for s in samples), default=0),
+            sum(s * s for s in samples) // len(samples) if samples else 0,
+        )
 
-    cloudpickle.register_pickle_by_value(_wav)
-    decode_wav = _wav.decode_wav
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         "NULL media payload")
-                    )
-                    continue
-                try:
-                    rate, ch, samples = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None, str(e))
-                    )
-                    continue
-                n_frames = len(samples) // ch
-                rows.append(
-                    (
-                        doc_id,
-                        rate,
-                        ch,
-                        n_frames,
-                        n_frames * 1_000_000 // rate,
-                        # an empty data chunk is VALID WAV (review r08):
-                        # a zero-length track scores silence, not a crash
-                        max((abs(s) for s in samples), default=0),
-                        (
-                            sum(s * s for s in samples) // len(samples)
-                            if samples
-                            else 0
-                        ),
-                    )
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                        "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, sample_rate long, channels long, n_frames long, "
-        "duration_us long, peak_amplitude long, mean_square long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _codec_lane(media_df, rows_of, _LOUDNESS_STATS, on_error, synth)
 
 
 @register(
@@ -1269,12 +1155,7 @@ def multimodal_wav_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture the synth step disappears and decode_features_wav runs over
     the binary column directly; exchanged rows are seven small ints.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import wav as _wav
-
-    cloudpickle.register_pickle_by_value(_wav)
-    encode_wav = _wav.encode_wav
+    encode_wav = _codec("wav").encode_wav
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1292,9 +1173,6 @@ def multimodal_wav_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_features_wav(docs, synth=synth).transform(sort_once, "doc_id")
 
 
@@ -1361,17 +1239,11 @@ def multimodal_phash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     and near-dup matching extends to Hamming-distance banding over the
     same two halves (the SimHash operator's bucketing, dedup.py).
     """
-    from pyspark import cloudpickle
     from pyspark.sql import Window
 
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import png as _png
-
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_png = _png.encode_png
-    decode_png = _png.decode_png
+    png = _codec("png")
+    encode_png = png.encode_png
+    decode_png = png.decode_png
     groups, salt = PH_GROUPS, PH_SHIFT_SALT
 
     def synth_decode_hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1447,68 +1319,15 @@ def decode_features_gif(media_df: DataFrame, on_error: str = "raise", synth=None
     residue, so two visually identical GIFs can differ) — the oracle
     replicates the same convention, so results stay cross-engine exact;
     alpha-weighted luma is what a perceptual consumer should use."""
-    from pyspark import cloudpickle
+    gif = _codec("gif")
+    decode_gif = gif.decode_gif
+    rec601 = gif.rec601_mean
 
-    from edgy_spark.functions import gif as _gif
+    def rows_of(data: bytes):
+        w, h, ch, px = decode_gif(data)
+        yield (w, h, rec601(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_gif = _gif.decode_gif
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_gif(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                luma = rec601(px, ch, w, h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    return _codec_lane(media_df, rows_of, _IMAGE_STATS, on_error, synth, digest=True)
 
 
 @register(
@@ -1556,12 +1375,7 @@ def multimodal_gif_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries — pixels never leave the
     executors; exchanged rows are (doc_id, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-
-    cloudpickle.register_pickle_by_value(_gif)
-    encode = _gif.encode_gif
+    encode = _codec("gif").encode_gif
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1589,9 +1403,6 @@ def multimodal_gif_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_gif(docs, synth=synth)
         .select("doc_id", "width", "height", "mean_luma")
@@ -1611,65 +1422,22 @@ def decode_frames_gif(
     real-decode operator; the 1→N frame expansion happens executor-side,
     so a 100 TB corpus of animations fans out at scan parallelism with no
     driver involvement."""
-    from pyspark import cloudpickle
+    gif = _codec("gif")
+    iter_frames = gif.iter_gif_frames
+    rec601 = gif.rec601_mean
 
-    from edgy_spark.functions import gif as _gif
+    def rows_of(data: bytes):
+        # incremental walk: frames decoded before a mid-stream corruption
+        # bank as rows ahead of the error row (review r11d)
+        for fi, (w, h, ch, px) in zip(range(max_frames), iter_frames(data)):
+            yield (fi, w, h, rec601(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_gif)
-    iter_frames = _gif.iter_gif_frames
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # decode_gif_frames' contract: max_frames <= 0 samples NO
-            # frames (and decodes nothing) — constant per operator, so
-            # decided once per batch, not per row
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                # incremental walk so a MID-STREAM corruption (an
-                # interrupted crawl download) keeps the frames decoded
-                # before it: good frames bank as rows, the failure lands
-                # as ONE error row after them (review r11d)
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_frames(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    # max_frames <= 0 samples NO frames and decodes nothing, NULL payloads
+    # included (decode_gif_frames' contract): a constant-false filter
+    # empties the input, and Spark prunes the constant-true one
+    return _codec_lane(
+        media_df.where(F.lit(max_frames > 0)), rows_of, _FRAME_STATS, on_error, synth
+    )
 
 
 def decode_frames_gif_composed(
@@ -1686,59 +1454,18 @@ def decode_frames_gif_composed(
     the composed RGBA, transparent canvas pixels contributing RGB 0.
     Same Arrow-batched ``mapInPandas`` shape, per-asset on_error
     capture, and mid-stream banking as the per-rect operator."""
-    from pyspark import cloudpickle
+    gif = _codec("gif")
+    iter_composed = gif.iter_gif_frames_composed
+    rec601 = gif.rec601_mean
 
-    from edgy_spark.functions import gif as _gif
+    def rows_of(data: bytes):
+        for fi, (w, h, ch, px) in zip(range(max_frames), iter_composed(data)):
+            yield (fi, w, h, rec601(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_gif)
-    iter_composed = _gif.iter_gif_frames_composed
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # same max_frames <= 0 short-circuit as decode_frames_gif
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_composed(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    # same max_frames <= 0 short-circuit as decode_frames_gif
+    return _codec_lane(
+        media_df.where(F.lit(max_frames > 0)), rows_of, _FRAME_STATS, on_error, synth
+    )
 
 
 def decode_frames_gif_timesampled(
@@ -1757,63 +1484,25 @@ def decode_frames_gif_timesampled(
     (doc_id, sample_idx, t_cs, frame_idx, width, height, mean_luma);
     the same Arrow-batched ``mapInPandas`` shape and on_error capture
     as every other real-decode operator."""
-    from pyspark import cloudpickle
+    gif = _codec("gif")
+    iter_samples = gif.iter_time_sampled_composed_frames
+    rec601 = gif.rec601_mean
 
-    from edgy_spark.functions import gif as _gif
+    def rows_of(data: bytes):
+        # samples from completed visibility windows bank before a
+        # mid-stream corruption raises (the r11d contract); a frame
+        # visible at several ticks is measured once
+        luma_cache: dict[int, int] = {}
+        for k, t, fi, (w, h, ch, px) in iter_samples(data, every_cs, max_samples):
+            if fi not in luma_cache:
+                luma_cache[fi] = rec601(px, ch, w, h)
+            yield (k, t, fi, w, h, luma_cache[fi])
 
-    cloudpickle.register_pickle_by_value(_gif)
-    iter_samples = _gif.iter_time_sampled_composed_frames
-    _rec601_mean = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         "NULL media payload")
-                    )
-                    continue
-                # incremental walk: samples from completed visibility
-                # windows BANK before a mid-stream corruption raises —
-                # the same r11d contract as the per-rect/composed ops
-                luma_cache: dict[int, int] = {}
-                try:
-                    for k, t, fi, (w, h, ch, px) in iter_samples(
-                        bytes(payload), every_cs, max_samples
-                    ):
-                        if fi not in luma_cache:
-                            luma_cache[fi] = _rec601_mean(px, ch, w, h)
-                        rows.append(
-                            (doc_id, k, t, fi, w, h, luma_cache[fi], None)
-                        )
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None, str(e))
-                    )
-                    continue
-            cols = [
-                "doc_id", "sample_idx", "t_cs", "frame_idx",
-                "width", "height", "mean_luma",
-            ]
-            if tolerant:
-                yield pd.DataFrame(rows, columns=cols + ["decode_error"])
-            else:
-                yield pd.DataFrame([r[:-1] for r in rows], columns=cols)
-
-    schema = (
-        "doc_id long, sample_idx long, t_cs long, frame_idx long, "
-        "width long, height long, mean_luma long"
+    return _codec_lane(
+        media_df, rows_of,
+        "sample_idx long, t_cs long, frame_idx long, " + _IMAGE_STATS,
+        on_error, synth,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -1877,12 +1566,7 @@ def multimodal_gif_timesample_stats(spark: SparkSession, sf_dir: str) -> DataFra
     executor-side inside Arrow-batched ``mapInPandas``; exchanged rows
     are (doc_id, 6 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_rects = _gif.encode_gif_animation_rects
+    encode_rects = _codec("gif").encode_gif_animation_rects
     pal = bytes(v for v in range(256) for _ in range(3))
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1920,9 +1604,6 @@ def multimodal_gif_timesample_stats(spark: SparkSession, sf_dir: str) -> DataFra
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_gif_timesampled(docs, synth=synth).transform(
         sort_once, "doc_id", "sample_idx"
     )
@@ -1989,12 +1670,7 @@ def multimodal_gif_composed_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     executor-side inside Arrow-batched ``mapInPandas``; exchanged rows
     are (doc_id, frame_idx, 3 small ints).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_rects = _gif.encode_gif_animation_rects
+    encode_rects = _codec("gif").encode_gif_animation_rects
     pal = bytes(v for v in range(256) for _ in range(3))
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2027,9 +1703,6 @@ def multimodal_gif_composed_stats(spark: SparkSession, sf_dir: str) -> DataFrame
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_gif_composed(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")
 
 
@@ -2077,12 +1750,7 @@ def multimodal_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other codec queries; the frame fan-out is
     executor-side (exchanged rows are (doc_id, frame_idx, 3 ints)).
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_anim = _gif.encode_gif_animation
+    encode_anim = _codec("gif").encode_gif_animation
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -2110,9 +1778,6 @@ def multimodal_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_gif(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")
 
 
@@ -2200,73 +1865,15 @@ def decode_features_webp(media_df: DataFrame, on_error: str = "raise") -> DataFr
     ``decode_error`` rows when ``on_error='null'`` (the crawl contract:
     dark data is visible, never silently wrong).
     """
-    from pyspark import cloudpickle
+    webp = _codec("webp")
+    decode_webp = webp.decode_webp
+    mean_luma_rgba = webp.mean_luma_rgba
 
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import webp as _webp
+    def rows_of(data: bytes):
+        w, h, ch, px = decode_webp(data)
+        yield (w, h, mean_luma_rgba(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_webp = _webp.decode_webp
-    mean_luma_rgba = _webp.mean_luma_rgba
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, ch, px = decode_webp(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                # shared Rec.601 statistic (webp.mean_luma_rgba) — exact
-                # int64 numpy accumulation (review r13/r14)
-                luma = mean_luma_rgba(px, ch, w, h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(decode, schema)
+    return _codec_lane(media_df, rows_of, _IMAGE_STATS, on_error, digest=True)
 
 
 @register(
@@ -2318,17 +1925,10 @@ def multimodal_webp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth step disappears and decode_features_webp runs over the binary
     column directly at the scan's natural multi-file parallelism.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import webp as _webp
-
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_webp = _webp.encode_webp_lossless
-    decode_webp = _webp.decode_webp
-    mean_luma_rgba = _webp.mean_luma_rgba
+    webp = _codec("webp")
+    encode_webp = webp.encode_webp_lossless
+    decode_webp = webp.decode_webp
+    mean_luma_rgba = webp.mean_luma_rgba
 
     # one fused Python stage (synth + decode, _fused_media_gate) — same
     # decoder entry point and shared Rec.601 statistic
@@ -2385,75 +1985,15 @@ def decode_features_webp_lossy(
     payloads into visible ``decode_error`` rows, same as every decode
     lane here.
     """
-    from pyspark import cloudpickle
+    webp = _codec("webp")
+    decode_planes = webp.decode_webp_planes
+    mean_luma_y = webp.mean_luma_y
 
-    from edgy_spark.functions import vp8 as _vp8
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import webp as _webp
+    def rows_of(data: bytes):
+        w, h, y, _u, _v = decode_planes(data)
+        yield (w, h, mean_luma_y(y, w, h))
 
-    cloudpickle.register_pickle_by_value(_vp8)
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    decode_planes = _webp.decode_webp_planes
-    mean_luma_y = _webp.mean_luma_y
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, y, _u, _v = decode_planes(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                         None, None, None, str(e))
-                    )
-                    continue
-                # shared exact-int64 Y mean (webp.mean_luma_y, review
-                # r13 finding #3 / r14)
-                luma = mean_luma_y(y, w, h)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(), w, h, luma)
-                )
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "n_bytes", "content_md5",
-                        "width", "height", "mean_luma",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, "
-        "width long, height long, mean_luma long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(decode, schema)
+    return _codec_lane(media_df, rows_of, _IMAGE_STATS, on_error, digest=True)
 
 
 @register(
@@ -2504,19 +2044,10 @@ def multimodal_webp_lossy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synth step disappears and decode_features_webp_lossy runs over
     the binary column at the scan's natural multi-file parallelism.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import vp8 as _vp8
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import webp as _webp
-
-    cloudpickle.register_pickle_by_value(_vp8)
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_lossy = _webp.encode_webp_lossy_flat
-    decode_planes = _webp.decode_webp_planes
-    mean_luma_y = _webp.mean_luma_y
+    webp = _codec("webp")
+    encode_lossy = webp.encode_webp_lossy_flat
+    decode_planes = webp.decode_webp_planes
+    mean_luma_y = webp.mean_luma_y
 
     # one fused Python stage (synth + decode, _fused_media_gate) — same
     # decoder entry point and shared native-Y mean (webp.mean_luma_y)
@@ -2548,62 +2079,17 @@ def decode_frames_webp_composed(
     two animation families cannot drift apart.  Same Arrow-batched
     ``mapInPandas`` shape, per-asset on_error capture, and mid-stream
     banking as the GIF composed operator."""
-    from pyspark import cloudpickle
+    iter_composed = _codec("webp").iter_webp_frames_composed
+    rec601 = _codec("gif").rec601_mean
 
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import vp8 as _vp8
-    from edgy_spark.functions import webp as _webp
+    def rows_of(data: bytes):
+        for fi, (w, h, ch, px) in zip(range(max_frames), iter_composed(data)):
+            yield (fi, w, h, rec601(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_gif)
-    cloudpickle.register_pickle_by_value(_vp8)
-    cloudpickle.register_pickle_by_value(_webp)
-    iter_composed = _webp.iter_webp_frames_composed
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_composed(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    # same max_frames <= 0 short-circuit as decode_frames_gif
+    return _codec_lane(
+        media_df.where(F.lit(max_frames > 0)), rows_of, _FRAME_STATS, on_error, synth
+    )
 
 
 @register(
@@ -2675,15 +2161,7 @@ def multimodal_webp_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are (doc_id, 4 small ints); the fixture scan is spread by
     ``_parallel_doc_ids``.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import webp as _webp
-
-    cloudpickle.register_pickle_by_value(_webp)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_anim = _webp.encode_webp_anim
+    encode_anim = _codec("webp").encode_webp_anim
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def gray(v: int, alpha: int = 255) -> bytes:
@@ -2719,9 +2197,6 @@ def multimodal_webp_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_webp_composed(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")
 
 
@@ -2745,64 +2220,14 @@ def decode_features_flac(media_df: DataFrame, on_error: str = "raise") -> DataFr
     Scale: samples never leave the executors — each payload reduces to six
     small ints in the exchanged rows; decode parallelism is the scan's.
     """
-    from pyspark import cloudpickle
+    flac = _codec("flac")
+    decode_flac = flac.decode_flac
+    loudness_stats = flac.loudness_stats
 
-    from edgy_spark.functions import flac as _flac
+    def rows_of(data: bytes):
+        yield loudness_stats(*decode_flac(data))
 
-    cloudpickle.register_pickle_by_value(_flac)
-    decode_flac = _flac.decode_flac
-    loudness_stats = _flac.loudness_stats
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None,
-                         "NULL media payload")
-                    )
-                    continue
-                try:
-                    rate, ch, samples = decode_flac(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, None, None, None, None, None, None, str(e))
-                    )
-                    continue
-                # shared loudness profile (flac.loudness_stats, r14)
-                rows.append((doc_id,) + loudness_stats(rate, ch, samples))
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                        "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "sample_rate", "channels", "n_frames",
-                        "duration_us", "peak_amplitude", "mean_square",
-                    ],
-                )
-
-    schema = (
-        "doc_id long, sample_rate long, channels long, n_frames long, "
-        "duration_us long, peak_amplitude long, mean_square long"
-    )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(decode, schema)
+    return _codec_lane(media_df, rows_of, _LOUDNESS_STATS, on_error)
 
 
 @register(
@@ -2856,14 +2281,10 @@ def multimodal_flac_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture the synth step disappears and decode_features_flac runs over
     the binary column directly at the scan's natural parallelism.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import flac as _flac
-
-    cloudpickle.register_pickle_by_value(_flac)
-    encode_flac = _flac.encode_flac
-    decode_flac = _flac.decode_flac
-    loudness_stats = _flac.loudness_stats
+    flac = _codec("flac")
+    encode_flac = flac.encode_flac
+    decode_flac = flac.decode_flac
+    loudness_stats = flac.loudness_stats
 
     # one fused Python stage (synth + decode, _fused_media_gate) — same
     # decoder entry point and shared loudness profile
@@ -2922,66 +2343,17 @@ def decode_features_mp3(media_df: DataFrame, on_error: str = "raise", synth=None
     (module docstring there); crawl contract (`on_error='null'`) as
     everywhere.
     """
-    from pyspark import cloudpickle
+    stream_stats = _codec("mp3").mp3_stream_stats
 
-    from edgy_spark.functions import mp3 as _mp3
+    def rows_of(data: bytes):
+        yield stream_stats(data)
 
-    cloudpickle.register_pickle_by_value(_mp3)
-    stream_stats = _mp3.mp3_stream_stats
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None)
-                        + (None,) * 6
-                        + ("NULL media payload",)
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    stats = stream_stats(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest())
-                        + (None,) * 6
-                        + (str(e),)
-                    )
-                    continue
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest()) + stats
-                )
-            cols = [
-                "doc_id", "n_bytes", "content_md5", "n_frames",
-                "sample_rate", "channel_mode", "total_samples",
-                "sum_bitrate_kbps", "audio_bytes",
-            ]
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=cols + ["decode_error"],
-                )
-            else:
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, n_frames long, "
-        "sample_rate long, channel_mode string, total_samples long, "
-        "sum_bitrate_kbps long, audio_bytes long"
+    return _codec_lane(
+        media_df, rows_of,
+        "n_frames long, sample_rate long, channel_mode string, "
+        "total_samples long, sum_bitrate_kbps long, audio_bytes long",
+        on_error, synth, digest=True,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 def _mp3_oracle() -> str:
@@ -3041,12 +2413,7 @@ def multimodal_mp3_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus the synth step disappears and decode_features_mp3 runs over
     the binary column directly.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import mp3 as _mp3
-
-    cloudpickle.register_pickle_by_value(_mp3)
-    encode_frames = _mp3.encode_mp3_frames
+    encode_frames = _codec("mp3").encode_mp3_frames
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3072,9 +2439,6 @@ def multimodal_mp3_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_mp3(_parallel_doc_ids(spark, sf_dir), synth=synth)
         .select(
@@ -3103,66 +2467,18 @@ def decode_features_jpeg_lossless(
     FULL-precision integers (no 8-bit squeeze), exact because the
     process is lossless by construction.  Crawl contract
     (``on_error='null'``) as every decode lane."""
-    from pyspark import cloudpickle
+    decode_lossless = _codec("jpeg").decode_jpeg_lossless
 
-    from edgy_spark.functions import jpeg as _jpeg
+    def rows_of(data: bytes):
+        w, h, nc, prec, samples = decode_lossless(data)
+        yield (w, h, nc, prec, sum(samples) // (w * h * nc))
 
-    cloudpickle.register_pickle_by_value(_jpeg)
-    decode_lossless = _jpeg.decode_jpeg_lossless
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            err_rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    err_rows.append(
-                        (doc_id, None, None)
-                        + (None,) * 5
-                        + ("NULL media payload",)
-                    )
-                    continue
-                data = bytes(payload)
-                try:
-                    w, h, nc, prec, samples = decode_lossless(data)
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    err_rows.append(
-                        (doc_id, len(data), hashlib.md5(data).hexdigest())
-                        + (None,) * 5
-                        + (str(e),)
-                    )
-                    continue
-                mean_sample = sum(samples) // (w * h * nc)
-                rows.append(
-                    (doc_id, len(data), hashlib.md5(data).hexdigest(),
-                     w, h, nc, prec, mean_sample)
-                )
-            cols = [
-                "doc_id", "n_bytes", "content_md5", "width", "height",
-                "n_components", "precision", "mean_sample",
-            ]
-            if tolerant:
-                yield pd.DataFrame(
-                    [r + (None,) for r in rows] + err_rows,
-                    columns=cols + ["decode_error"],
-                )
-            else:
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = (
-        "doc_id long, n_bytes long, content_md5 string, width long, "
-        "height long, n_components long, precision long, mean_sample long"
+    return _codec_lane(
+        media_df, rows_of,
+        "width long, height long, n_components long, precision long, "
+        "mean_sample long",
+        on_error, synth, digest=True,
     )
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
 
 
 @register(
@@ -3210,12 +2526,7 @@ def multimodal_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFram
     exchanged rows are (doc_id, 4 small ints); the fixture scan is
     spread by ``_parallel_doc_ids``.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import jpeg as _jpeg
-
-    cloudpickle.register_pickle_by_value(_jpeg)
-    encode_lossless = _jpeg.encode_jpeg_lossless
+    encode_lossless = _codec("jpeg").encode_jpeg_lossless
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3237,9 +2548,6 @@ def multimodal_jpeg_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFram
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return (
         decode_features_jpeg_lossless(_parallel_doc_ids(spark, sf_dir), synth=synth)
         .select(
@@ -3270,60 +2578,17 @@ def decode_frames_apng_composed(
     RGB 0).  Same Arrow-batched ``mapInPandas`` shape, per-asset
     on_error capture, and mid-stream banking as the GIF/WebP composed
     operators."""
-    from pyspark import cloudpickle
+    iter_composed = _codec("png").iter_apng_frames_composed
+    rec601 = _codec("gif").rec601_mean
 
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import png as _png
+    def rows_of(data: bytes):
+        for fi, (w, h, ch, px) in zip(range(max_frames), iter_composed(data)):
+            yield (fi, w, h, rec601(px, ch, w, h))
 
-    cloudpickle.register_pickle_by_value(_gif)
-    cloudpickle.register_pickle_by_value(_png)
-    iter_composed = _png.iter_apng_frames_composed
-    rec601 = _gif.rec601_mean
-    tolerant = _check_on_error(on_error)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            media = zip(pdf["doc_id"], pdf["media"]) if max_frames > 0 else ()
-            for doc_id, payload in media:
-                if payload is None:
-                    if not tolerant:
-                        raise ValueError("NULL media payload")
-                    rows.append(
-                        (doc_id, None, None, None, None, "NULL media payload")
-                    )
-                    continue
-                fi = 0
-                try:
-                    for w, h, ch, px in iter_composed(bytes(payload)):
-                        luma = rec601(px, ch, w, h)
-                        rows.append((doc_id, fi, w, h, luma, None))
-                        fi += 1
-                        if fi >= max_frames:
-                            break
-                except (ValueError, NotImplementedError) as e:
-                    if not tolerant:
-                        raise
-                    rows.append((doc_id, None, None, None, None, str(e)))
-                    continue
-            if tolerant:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "frame_idx", "width", "height",
-                        "mean_luma", "decode_error",
-                    ],
-                )
-            else:
-                yield pd.DataFrame(
-                    [r[:-1] for r in rows],
-                    columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
-                )
-
-    schema = "doc_id long, frame_idx long, width long, height long, mean_luma long"
-    if tolerant:
-        schema += ", decode_error string"
-    return media_df.mapInPandas(_maybe_fuse_synth(decode, synth), schema)
+    # same max_frames <= 0 short-circuit as decode_frames_gif
+    return _codec_lane(
+        media_df.where(F.lit(max_frames > 0)), rows_of, _FRAME_STATS, on_error, synth
+    )
 
 
 @register(
@@ -3395,15 +2660,7 @@ def multimodal_apng_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are (doc_id, 4 small ints); the fixture scan is spread by
     ``_parallel_doc_ids``.
     """
-    from pyspark import cloudpickle
-
-    from edgy_spark.functions import gif as _gif
-    from edgy_spark.functions import png as _png
-
-    cloudpickle.register_pickle_by_value(_png)
-    # webp/png reference gif's shared animation helpers (r14)
-    cloudpickle.register_pickle_by_value(_gif)
-    encode_apng = _png.encode_apng
+    encode_apng = _codec("png").encode_apng
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def gray(v: int, alpha: int = 255) -> bytes:
@@ -3436,7 +2693,4 @@ def multimodal_apng_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": media})
 
     docs = _parallel_doc_ids(spark, sf_dir)
-    # r15: synth runs INSIDE the decode's own Python stage (one
-    # MapInPandas, guide §4 — _maybe_fuse_synth); the synthesized bytes
-    # never cross the JVM<->Arrow boundary
     return decode_frames_apng_composed(docs, synth=synth).transform(sort_once, "doc_id", "frame_idx")

@@ -832,7 +832,7 @@ def test_codec_queries_scan_doc_id_only(spark):
     # r14: the six BENCH gates fuse synth+decode into ONE Python stage
     # (_fused_media_gate — the media bytes cross the Arrow boundary zero
     # times instead of twice); r15 fuses the non-bench gates too
-    # (decode_features_*(docs, synth=...) via _maybe_fuse_synth), so every
+    # (decode_features_*(docs, synth=...) via _codec_lane), so every
     # gate is ONE Python stage
     for q, stages in (
         ("multimodal_jpeg_block_stats", 1),
@@ -974,7 +974,7 @@ def test_codec_gates_decode_in_parallel(spark):
             "roundrobinpartitioning" in plan.lower(), name
         # r15: EVERY synth gate (bench and non-bench, single- and
         # multi-row-per-doc) now fuses synth+decode into ONE Python stage
-        # (_maybe_fuse_synth) — two MapInPandas nodes means the payload
+        # (_codec_lane's synth) — two MapInPandas nodes means the payload
         # crosses the Arrow boundary twice again
         assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, name
         m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
