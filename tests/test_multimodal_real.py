@@ -958,6 +958,56 @@ def test_codec_fuzz_raises_only_valueerror():
     check()
 
 
+def test_decode_operators_on_error_null_captures_per_row(spark):
+    """on_error='null' (r11): a malformed asset yields NULL stats plus a
+    decode_error message instead of killing the task — the only workable
+    mode over a real crawl; valid rows are unaffected and the default
+    'raise' mode still fails fast."""
+    import pytest as _pytest
+
+    from edgy_spark.functions.gif import encode_gif
+    from edgy_spark.functions.png import encode_png
+    from edgy_spark.operators.multimodal import (
+        decode_features_gif,
+        decode_features_png,
+        decode_frames_gif,
+    )
+
+    png_ok = encode_png(2, 2, [b"\x80\x80", b"\x40\x40"], color_type=0)
+    pal = bytes(range(12))
+    gif_ok = encode_gif(2, 2, [bytes([0, 1]), bytes([2, 3])], pal)
+    for fn, good in (
+        (decode_features_png, png_ok),
+        (decode_features_gif, gif_ok),
+        (decode_frames_gif, gif_ok),
+    ):
+        df = spark.createDataFrame(
+            [(1, bytearray(good)), (2, bytearray(good[:9]))],
+            "doc_id long, media binary",
+        )
+        with _pytest.raises(Exception):
+            fn(df).collect()  # default: first malformed asset fails the job
+        rows = {r["doc_id"]: r for r in fn(df, on_error="null").collect()}
+        assert rows[1]["mean_luma"] is not None and rows[1]["decode_error"] is None
+        assert rows[2]["mean_luma"] is None and rows[2]["decode_error"]
+        assert rows[2]["width"] is None
+
+
+def test_decode_features_png_raise_schema_unchanged(spark):
+    """The default mode's schema must stay byte-identical to pre-r11 —
+    the oracle-gated queries select from it."""
+    from edgy_spark.functions.png import encode_png
+    from edgy_spark.operators.multimodal import decode_features_png
+
+    df = spark.createDataFrame(
+        [(1, bytearray(encode_png(2, 1, [b"\x10\x20"], color_type=0)))],
+        "doc_id long, media binary",
+    )
+    assert decode_features_png(df).columns == [
+        "doc_id", "n_bytes", "content_md5", "width", "height", "mean_luma"
+    ]
+
+
 def test_gif_animation_pixel_budget_is_cumulative(monkeypatch):
     """Per-frame caps alone would let an N-frame animation allocate
     N x MAX_PIXELS; the budget is per ASSET."""
